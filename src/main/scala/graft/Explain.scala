@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-audit main: prints the formatted physical plan of selected
   * queries (all by default) so pushdown, join strategy, and codegen
   * spans can be reviewed. Usage: runMain graft.Explain [sfDir] [q...]
@@ -10,12 +8,8 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val wanted = args.drop(1).toSet
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // the bench's session, so the printed plans are the ones it times
+    val spark = Harness.session(Harness.Batch)
     spark.sparkContext.setLogLevel("ERROR")
     SparkEntry.queries.toSeq
       .sortBy(_._1.stripPrefix("q").takeWhile(_.isDigit).toInt)

@@ -283,23 +283,12 @@ object Scaling {
       .map(_.split(",").toSeq.map(_.trim.toInt)).getOrElse(Factors)
     val only = sys.env.get("SPARK_GRAFT_SCALING_ONLY").map(_.split(",").toSet)
     val queriesRun = queries.filter { case (n, _) => only.forall(_.contains(n)) }
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      // a real cluster scales partition count with the corpus; the
-      // fixed-32 default here means upper decades run with growing
-      // per-task working sets — overridable to separate that
-      // measurement-regime effect from true plan growth
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // see Bench: codegen-class cache sized for a many-query sweep
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      // see Bench: AQE-sized partitioning under cached relations —
-      // size-adaptive at every decade, same switch the bench runs with
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // a real cluster scales partition count with the corpus; the
+    // fixed-32 default here means upper decades run with growing
+    // per-task working sets — overridable to separate that
+    // measurement-regime effect from true plan growth
+    val spark = Harness.session(Harness.Batch, master = "local[32]",
+      shufflePartitions = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "32"))
 
     // warm-cell discipline (round 15, VERDICT r14 item 3): the first
     // timed cells after an untimed multi-GB tmpfs corpus write read

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Online serving-path latency harness: times the reference's actual
   * user experience — the full composed retrieve of ChatPipeline.query
   * (reference main.rs:440-530: classify → HyDE → embed → ANN →
@@ -47,22 +45,9 @@ object ServeBench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val nQueries = sys.env.getOrElse("SPARK_GRAFT_SERVE_QUERIES", "24").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // serving-tier config, applied to BOTH measured engines: AQE's
-      // per-stage re-planning is built for batch jobs and costs fixed
-      // milliseconds per exchange on point queries (classic DPP works
-      // without it). A latency tier runs with it off; the batch Bench
-      // keeps the adaptive default.
-      .config("spark.sql.adaptive.enabled", "false")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // serving-tier config, applied to BOTH measured engines
+    val spark = Harness.session(Harness.Serving)
 
     // ---- untimed prepare: corpus files -> index -> registration ----
     // SPARK_GRAFT_SERVE_REPLICATE=N writes each doc N times (distinct

@@ -1,26 +1,13 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // see Bench: the 100-entry default evicts constantly over a
-      // 148-query sweep (static conf — must precede getOrCreate)
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      // see Bench: AQE-sized partitioning under cached relations (the
-      // verify run must execute the same physical configuration the
-      // bench times, so the oracle compare covers it)
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // the bench's session, so the oracle compare covers the physical
+    // configuration the bench times
+    val spark = Harness.session(Harness.Batch)
     new java.io.File(outDir).mkdirs()
     // dev-loop filter (same contract as Bench): unset for driver runs
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)

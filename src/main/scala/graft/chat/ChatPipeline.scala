@@ -1287,13 +1287,8 @@ object ChatCli {
   }
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
-      .appName("graft-chat")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Harness.session(graft.Harness.Serving,
+      master = sys.env.getOrElse("SPARK_MASTER", "local[4]"), shufflePartitions = "4")
     args.toList match {
       case "index" :: rest0 =>
         parseFlags(rest0) match {

@@ -4,6 +4,7 @@ import java.io.{BufferedReader, InputStreamReader}
 import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import java.nio.charset.StandardCharsets
+import java.time.Duration
 import scala.jdk.CollectionConverters._
 import com.fasterxml.jackson.databind.ObjectMapper
 import graft.chat.Schemas.{QueryClassification, RepoProfile}
@@ -69,12 +70,15 @@ object Sse {
   * so the offline pipeline never carries dead network code paths.
   */
 class OpenAiChatClient(baseUrl: String, apiKey: Option[String], model: String,
-                       chunkSize: Int = 1000) extends ChatClient {
+                       chunkSize: Int = 1000,
+                       requestTimeout: Duration = OpenAiChatClient.RequestTimeout)
+    extends ChatClient {
 
   /** The model the request bodies will carry (flag-routing spec hook). */
   private[graft] def modelName: String = model
 
-  @transient private lazy val http = HttpClient.newHttpClient()
+  @transient private lazy val http =
+    HttpClient.newBuilder().connectTimeout(OpenAiChatClient.ConnectTimeout).build()
   @transient private lazy val mapper = new ObjectMapper()
 
   private def jstr(s: String): String = mapper.writeValueAsString(s)
@@ -101,6 +105,7 @@ class OpenAiChatClient(baseUrl: String, apiKey: Option[String], model: String,
     val b = HttpRequest.newBuilder()
       .uri(URI.create(s"${baseUrl.stripSuffix("/")}/chat/completions"))
       .header("Content-Type", "application/json")
+      .timeout(requestTimeout)
     apiKey.foreach(k => b.header("Authorization", s"Bearer $k"))
     http.send(b.POST(HttpRequest.BodyPublishers.ofString(body)).build(),
       HttpResponse.BodyHandlers.ofInputStream())
@@ -189,6 +194,14 @@ class OpenAiChatClient(baseUrl: String, apiKey: Option[String], model: String,
 }
 
 object OpenAiChatClient {
+
+  /** Every wait on the LLM endpoint is bounded: connecting, and each
+    * request until its response headers arrive (a streamed answer's
+    * tokens then flow as the server sends them). Past either bound the
+    * call fails with `HttpConnectTimeoutException` /
+    * `HttpTimeoutException` instead of hanging the query. */
+  val ConnectTimeout: Duration = Duration.ofSeconds(10)
+  val RequestTimeout: Duration = Duration.ofSeconds(120)
 
   /** Env-gated factory: GRAFT_OPENAI_BASE_URL (e.g.
     * https://api.openai.com/v1) enables the HTTP client, with

@@ -22,7 +22,4 @@ object ExactSums {
 
   /** Exact sum of a money-like double (2 decimal places), emitted as double. */
   def moneySum(x: Column): Column = flooredSum(x, 100L) / lit(100.0)
-
-  /** Exact sum at micro precision (6 decimal places), emitted as double. */
-  def microSum(x: Column): Column = flooredSum(x, 1000000L) / lit(1000000.0)
 }

@@ -39,15 +39,4 @@ object VectorFunctions {
     * reference's "lower = more relevant" ordering (src/hyde.rs:668). */
   def cosineDistance(a: Column, b: Column): Column =
     lit(1.0) - cosineSimilarity(a, b)
-
-  /** Squared euclidean distance — cheaper than euclidean when only the
-    * ordering matters (monotone transform). */
-  def squaredL2Distance(a: Column, b: Column): Column =
-    aggregate(
-      zip_with(a, b, (x, y) => {
-        val d = x.cast("double") - y.cast("double")
-        d * d
-      }),
-      lit(0.0),
-      (acc, x) => acc + x)
 }

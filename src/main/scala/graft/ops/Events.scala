@@ -502,7 +502,7 @@ object Events {
     // round 16 (guide §4): pair emission as pure-codegen generators —
     // sort_array + posexplode + explode(slice(s, pos+2, size)) — in
     // place of the typed flatMap, which paid a SerializeFromObject
-    // boundary and a Tuple2 allocation per pair. Q170Probe at the f=64
+    // boundary and a Tuple2 allocation per pair. At the f=64
     // amplified decade: 13.56 → 12.45 s (min-of-2) on the mutual-edge
     // half, with tighter pass-to-pass spread (12.45/12.49 vs
     // 13.56/15.53); identical 224,448-row edge set. The slice per
@@ -585,8 +585,8 @@ object Events {
     // f=64 amplified decade 13.8 → 31.6 s — the orientation joins'
     // strategy degrades once und outgrows broadcast range and the
     // oriented subtree, now rooted in joins instead of a reusable
-    // exchange, re-executes per triangle alias. Q170Probe carries the
-    // A/B; the window form stays.)
+    // exchange, re-executes per triangle alias; the window form
+    // stays.)
     val bi = und.select(col("a").as("n"), col("b").as("m"))
       .union(und.select(col("b").as("n"), col("a").as("m")))
       .withColumn("dn", count(lit(1)).over(Window.partitionBy("n")))

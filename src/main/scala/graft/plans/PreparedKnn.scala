@@ -84,29 +84,6 @@ object PreparedKnn {
   val phaseNanos: Array[java.util.concurrent.atomic.AtomicLong] =
     Array.fill(4)(new java.util.concurrent.atomic.AtomicLong(0))
 
-  /** Bounded job admission for the serving path (round 16, guide §2.6).
-    * A FIFO semaphore caps serving-side candidate jobs in flight; 0
-    * (the default) disables it. MEASURED OFF at the bench's 8-stream /
-    * 32-core point: an interleaved A/B (3 runs each, same box, same
-    * session order OFF/ON3/OFF/ON3/OFF/ON3) read OFF p95 147.9/131.8/
-    * 131.2 ms, qps 83.0/83.3/89.6 vs ON(3) p95 268.5/151.2/~, qps
-    * 49.7/68.4/~ — at this core-to-stream ratio the scheduler absorbs 8
-    * concurrent candidate jobs and the fair queue's wait exceeds the
-    * contention it removes. The knob stays for deployments whose stream
-    * count actually oversubscribes the scheduler (§2.6's regime), where
-    * explicit arrival-order queueing beats stage-level thrash; wait
-    * time is charged to the phase that queued, so the attribution
-    * artifact reads true either way. */
-  private val maxServeJobs: Int =
-    sys.env.get("SPARK_GRAFT_SERVE_MAX_JOBS").map(_.toInt).getOrElse(0)
-  private val jobGate: Option[java.util.concurrent.Semaphore] =
-    if (maxServeJobs > 0) Some(new java.util.concurrent.Semaphore(maxServeJobs, true))
-    else None
-  private[graft] def gatedJob[T](body: => T): T = jobGate match {
-    case Some(s) => s.acquire(); try body finally s.release()
-    case None => body
-  }
-
   def invalidate(indexDir: String): Unit = {
     entries.keys.filter(_._2 == indexDir).foreach(entries.remove)
     PayloadStore.invalidate(indexDir)
@@ -281,7 +258,7 @@ object PreparedKnn {
     // ---- job 1: candidate top-(k2 x NumTrees), driver merge ----
     val tJob1 = System.nanoTime()
     phaseNanos(0).addAndGet(tJob1 - tPrep0)
-    val raw = gatedJob(cand.executeCollect())
+    val raw = cand.executeCollect()
     val tMerge0 = System.nanoTime()
     phaseNanos(1).addAndGet(tMerge0 - tJob1)
     // dedup in sort order: first copy per chunk == min distance; stop

@@ -5,15 +5,24 @@ import org.scalatest.funsuite.AnyFunSuite
 /** The bench's flat-profile envelope must be ENFORCED, not just
   * recorded (VERDICT r11 item 2: round 10 shipped two 4-6 s lines
   * green because nothing failed). Planted-offender coverage for the
-  * gate main() turns into a non-zero exit. */
+  * gate (with its breach retry) that main() turns into a non-zero
+  * exit. */
 class BenchGateSpec extends AnyFunSuite {
 
   private val sweep = "/root/testdata/sf0.1"
 
+  /** The gate's verdict when every re-measure reproduces the first one. */
+  private def gate(results: Seq[(String, Double, Boolean)], maxLine: Double,
+                   sfDir: String): Option[String] = {
+    val bySec = results.map { case (k, v, _) => k -> v }.toMap
+    Bench.gateWithRetry(results.map { case (k, v, ok) => (k, v, ok, 0L) }, maxLine, sfDir,
+      name => (bySec(name), true, 0L))._2
+  }
+
   test("a planted slow line fails the gate with the offender named") {
     val results = Seq(("q1_agg", 0.4, true), ("q170_graph_triangles", 5.21, true),
       ("q2_join", 0.3, true))
-    val msg = Bench.flatProfileFailure(results, 3.0, sweep)
+    val msg = gate(results, 3.0, sweep)
     assert(msg.isDefined)
     assert(msg.get.contains("q170_graph_triangles=5.21s"))
     assert(!msg.get.contains("q1_agg"))
@@ -21,21 +30,21 @@ class BenchGateSpec extends AnyFunSuite {
 
   test("an all-fast sweep passes") {
     val results = Seq(("q1_agg", 0.4, true), ("q170_graph_triangles", 2.2, true))
-    assert(Bench.flatProfileFailure(results, 3.0, sweep).isEmpty)
+    assert(gate(results, 3.0, sweep).isEmpty)
   }
 
   test("failed lines are the errors channel's job, not the envelope's") {
     // a FAILED query reports negative seconds and rides the errors
     // list; the envelope must not double-report it
     val results = Seq(("q9_broken", 9.9, false))
-    assert(Bench.flatProfileFailure(results, 3.0, sweep).isEmpty)
+    assert(gate(results, 3.0, sweep).isEmpty)
   }
 
   test("amplified-SF probes and explicit opt-out disable the gate") {
     val slow = Seq(("q1_agg", 9.0, true))
-    assert(Bench.flatProfileFailure(slow, 3.0, "/tmp/amplified_x32").isEmpty)
-    assert(Bench.flatProfileFailure(slow, 0.0, sweep).isEmpty)
-    assert(Bench.flatProfileFailure(slow, -1.0, sweep).isEmpty)
+    assert(gate(slow, 3.0, "/tmp/amplified_x32").isEmpty)
+    assert(gate(slow, 0.0, sweep).isEmpty)
+    assert(gate(slow, -1.0, sweep).isEmpty)
   }
 
   // --- breach-retry discipline (VERDICT r13 item 1) ---------------------

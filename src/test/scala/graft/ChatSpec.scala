@@ -308,6 +308,18 @@ class ChatSpec extends SparkSpec {
     assert(ChatPipeline.readIndexMeta(outD.getAbsolutePath).get.contentMode == "default")
   }
 
+  test("chunkStats: per-language chunk and distinct-file counts, unknown for no language") {
+    val chunks = Seq(
+      CodeChunk("src/main.rs", "fn main() {}", Some("Rust"), Some("rs")),
+      CodeChunk("src/main.rs", "fn two() {}", Some("Rust"), Some("rs")),
+      CodeChunk("src/lib.rs", "pub fn lib() {}", Some("Rust"), Some("rs")),
+      CodeChunk("tool.py", "def f(): pass", Some("Python"), Some("py")),
+      CodeChunk("Makefile", "all:", None, None)).toDF()
+    val stats = Chunker.chunkStats(chunks)
+      .select("language", "n_chunks", "n_files").as[(String, Long, Long)].collect().toSeq
+    assert(stats == Seq(("Python", 1L, 1L), ("Rust", 3L, 2L), ("unknown", 1L, 1L)))
+  }
+
   test("approximate kNN agrees with exact on overlapping hits") {
     val repo = makeRepo()
     val out = Files.createTempDirectory("graft_idx2").toFile

@@ -121,6 +121,25 @@ class OpenAiSpec extends AnyFunSuite {
     }
   }
 
+  test("a server that never answers fails the call within the request bound") {
+    val release = new java.util.concurrent.CountDownLatch(1)
+    withServer { (_, _) =>
+      release.await(30, java.util.concurrent.TimeUnit.SECONDS); ()
+    } { base =>
+      val bound = java.time.Duration.ofMillis(500)
+      val client = new OpenAiChatClient(base, None, "test-model", requestTimeout = bound)
+      val t0 = System.nanoTime()
+      try {
+        intercept[java.net.http.HttpTimeoutException](client.classify("q"))
+        val waitedMs = (System.nanoTime() - t0) / 1e6
+        assert(waitedMs >= 400 && waitedMs < 10000, s"waited $waitedMs ms")
+      } finally release.countDown()
+    }
+    // the deployed bounds are finite
+    assert(OpenAiChatClient.ConnectTimeout.getSeconds > 0)
+    assert(OpenAiChatClient.RequestTimeout.getSeconds > 0)
+  }
+
   // ---------------------------------------------------------------
   // Prompt-template fidelity: the three request bodies carry the
   // reference's exact prompt stack (hyde.rs:17-60, 95-145, 147-295,
