@@ -28,7 +28,7 @@ object Explain {
           org.apache.spark.sql.execution.FormattedMode)
         try println(
           if (eagerMode) plan()
-          else graft.ops.Materialize.withoutEagerness(plan()))
+          else graft.ops.Materialize.withoutEagerness(spark)(plan()))
         catch { case e: Throwable => println(s"explain failed: ${e.getMessage}") }
         finally graft.ops.Materialize.release(spark)
       }

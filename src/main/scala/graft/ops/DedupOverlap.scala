@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.{Consts, Tables}
+import graft.functions.PairCounts
 import graft.ops.TextAnalytics.{tokens, shingles3, sqlShingles}
 
 /** Set-overlap families over the shared shingle tables: n-gram
@@ -96,10 +97,10 @@ trait DedupOverlap { this: Dedup.type =>
     * exchange of the exploded shingle table builds the posting lists
     * (the old a-join-b form exchanged and sorted that table TWICE as
     * the two join sides — measured 64 s / top-decade exponent 1.06 at
-    * the f=512 Scaling decade); pair emission is then a map-side
-    * flatMap over each list (i<j, list sorted ascending), and the
-    * exact intersection counts are one grouped count over candidate
-    * rows, the same Σ df² volume the join produced.
+    * the f=512 Scaling decade); the scan emits each posting list as
+    * one sorted row, [[PairCounts]] forms its i<j pairs, and its
+    * grouped count is the exact intersection count — the same Σ df²
+    * volume the join produced.
     *
     * `dfCap` (default [[JaccardDfCap]], see there for the recall
     * trade): the posting buffer is a PHYSICAL memory bound — the group
@@ -145,7 +146,7 @@ trait DedupOverlap { this: Dedup.type =>
     * shingles(doc_b)| over same-source pairs sharing ≥ 1 (uncapped)
     * shingle, doc_a < doc_b. Plan shape per the q15 scaladoc above:
     * one keyed exchange + in-partition sort + streaming group scan +
-    * one grouped count. */
+    * [[PairCounts]]. */
   private def sharedShingleCounts(spark: SparkSession, sfDir: String,
                                   dfCap: Option[Long],
                                   bits: Int): DataFrame = {
@@ -166,56 +167,47 @@ trait DedupOverlap { this: Dedup.type =>
     val parts = math.max(defaultParts, math.ceil(nDocs / 20000.0).toInt)
     // null-source rows can never pair (the join form's a.source =
     // b.source drops them); the group scan must drop them too
-    sh.filter(col("source").isNotNull)
+    val runs = sh.filter(col("source").isNotNull)
       .select(col("source"), col("hv"), col("doc_id"))
       .as[(String, Long, Long)]
       .repartition(parts, col("source"), col("hv"))
       .sortWithinPartitions("source", "hv", "doc_id")
       .mapPartitions { it =>
-        // stream (source, hv) runs: doc ids arrive sorted, so pair
-        // emission is i<j over the run buffer; a run past the cap is
-        // boilerplate — emit nothing and skip to the next run
-        new Iterator[(String, Long, Long)] {
-          var out: Iterator[(String, Long, Long)] = Iterator.empty
+        // stream (source, hv) runs: doc ids arrive sorted, so each kept
+        // run is one sorted (source, ids) row for PairCounts; a run past
+        // the cap is boilerplate — emit nothing and skip to the next run
+        new Iterator[(String, Array[Long])] {
+          var out: (String, Array[Long]) = null
           var curSrc: String = null
           var curHv: Long = 0L
           val run = new scala.collection.mutable.ArrayBuffer[Long]()
           var saturated = false
-          def flushRun(): Iterator[(String, Long, Long)] = {
-            val n = run.length
-            val res =
-              if (saturated || n < 2) Iterator.empty
-              else {
-                val ids = run.toArray // sorted ascending by the sort above
-                val src = curSrc
-                for {
-                  i <- Iterator.range(0, n - 1)
-                  j <- Iterator.range(i + 1, n)
-                } yield (src, ids(i), ids(j))
-              }
+          def flushRun(): Unit = {
+            if (!saturated && run.length >= 2) out = (curSrc, run.toArray)
             run.clear(); saturated = false
-            res
           }
           def advance(): Unit = {
-            while (out.isEmpty && it.hasNext) {
+            while (out == null && it.hasNext) {
               val (src, hv, id) = it.next()
               if (src != curSrc || hv != curHv) {
-                out = flushRun()
+                flushRun()
                 curSrc = src; curHv = hv
               }
               if (saturated) ()
               else if (run.length >= cap) { run.clear(); saturated = true }
               else run += id
             }
-            if (out.isEmpty && !it.hasNext) out = flushRun()
+            if (out == null && !it.hasNext) flushRun()
           }
-          def hasNext: Boolean = { advance(); out.hasNext }
-          def next(): (String, Long, Long) = { advance(); out.next() }
+          def hasNext: Boolean = { advance(); out != null }
+          def next(): (String, Array[Long]) = {
+            advance(); val r = out; out = null; r
+          }
         }
       }
-      .toDF("source", "doc_a", "doc_b")
-      .groupBy("source", "doc_a", "doc_b")
-      .agg(count(lit(1)).as("cnt"))
+      .toDF("source", "ids")
+    PairCounts(runs, "ids", "source")
+      .select(col("source"), col("a").as("doc_a"), col("b").as("doc_b"), col("n").as("cnt"))
   }
 
   def jaccardPairsSql: String =
@@ -869,7 +861,7 @@ trait DedupOverlap { this: Dedup.type =>
     *
     * Scale shape: ONE shuffle keyed by hv builds the per-shingle
     * source set (collect_set dedups map-side), and the S²/2 source
-    * pairs each shingle contributes are EMITTED by a flatMap over
+    * pairs each shingle contributes are EMITTED by [[PairCounts]] over
     * that set and collapsed by partial aggregation to at most S²/2
     * rows per partition before the final ≤S²/2-row shuffle — the
     * pair volume (shingle-frequency × S², ~19M rows at sf0.1 because
@@ -890,7 +882,6 @@ trait DedupOverlap { this: Dedup.type =>
   def sourceOverlap(spark: SparkSession, sfDir: String,
                     bits: Int = DefaultHashBits,
                     dfCap: Option[Long] = None): DataFrame = {
-    import spark.implicits._
     val byHv = shingleRows(spark, sfDir, bits)
       .groupBy("hv").agg(collect_set(col("source")).as("srcs"))
     val capped = dfCap match {
@@ -902,33 +893,16 @@ trait DedupOverlap { this: Dedup.type =>
     val ss = Materialize.shared(spark, capped)
     val sizes = ss.select(explode(col("srcs")).as("source"))
       .groupBy("source").agg(count(lit(1)).as("n"))
-    // Pair emission is the round-11 flatMap through Spark's partial
-    // HashAggregate (round 15 A/B'd an in-closure HashMap count — it
-    // bounded the serialized volume but read ~2× slower per emission
-    // at the f=64 amplified decade's ~1.2B enumerations, 11.8-17.7 s
-    // vs 7.9 s: the codegen'd UnsafeRow write + hash-agg probe beats a
-    // boxed-tuple map merge; the partial aggregate already collapses
-    // output to ≤ S²/2 rows per partition).
-    //
-    // The explicit repartition (round 15) exists because this
-    // operator's WORK is fan-out-amplified (Σ|srcs|² per input row)
-    // while its input BYTES are only vocabulary-sized: any
-    // byte-proportional width — AQE coalescing over the cached scan
-    // (measured: ONE partition for the 19M-pair enumeration at sf0.1
-    // under cached-plan AQE, 4.7 s vs 0.9) — under-parallelizes it.
-    // The session shuffle width is the cluster-sized knob a real
-    // deployment scales, and the exchange itself moves narrow
-    // vocabulary-sized rows.
-    val pairs = ss.select(col("srcs"))
+    // The repartition to the session shuffle width keeps the emission
+    // stage wide (see PairCounts): under cached-plan AQE the
+    // vocabulary-sized scan coalesced to ONE partition for the 19M-pair
+    // enumeration at sf0.1 (4.7 s vs 0.9 s). Sorting after it keeps
+    // the sort in the wide stage too.
+    val srcSets = ss.select(col("srcs"))
       .repartition(spark.sessionState.conf.numShufflePartitions)
-      .as[Seq[String]]
-      .flatMap { srcs =>
-        val s = srcs.sorted
-        for { i <- s.indices.iterator; j <- (i + 1) until s.length }
-          yield (s(i), s(j))
-      }
-      .toDF("source_a", "source_b")
-      .groupBy("source_a", "source_b").agg(count(lit(1)).as("n_shared"))
+      .select(sort_array(col("srcs")).as("srcs"))
+    val pairs = PairCounts(srcSets, "srcs")
+      .select(col("a").as("source_a"), col("b").as("source_b"), col("n").as("n_shared"))
     pairs
       .join(broadcast(sizes.select(col("source").as("source_a"), col("n").as("na"))), "source_a")
       .join(broadcast(sizes.select(col("source").as("source_b"), col("n").as("nb"))), "source_b")

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.{Consts, Tables}
+import graft.functions.PairCounts
 import graft.ops.TextAnalytics.{tokens, shingles3, sqlShingles}
 
 /** Winnowing fingerprints (Schleimer/Wilkerson/Aiken 2003): pair
@@ -110,10 +111,10 @@ trait DedupWinnow { this: Dedup.type =>
     * plagiarism/attribution primitive rather than a dedup sampler.
     *
     * Scale shape: the fingerprint relation arrives scan-local and
-    * already ~3× sparser than a full gram index; pair generation is the
-    * same inverted-index self-equi-join discipline as
-    * jaccardPairsSparse, fan-out bounded by Σ df² over fingerprint
-    * document frequencies, with the `dfCap` remedy for power-law hot
+    * already ~3× sparser than a full gram index; pair generation runs
+    * each fingerprint's document set through [[PairCounts]], fan-out
+    * bounded by Σ df² over fingerprint document frequencies, with the
+    * `dfCap` remedy for power-law hot
     * fingerprints ON BY DEFAULT at [[WinnowDfCap]] (a fingerprint in
     * >cap docs is boilerplate — dropped, recall trade documented
     * there; the DuckDB oracle stays byte-identical because the cap
@@ -123,49 +124,29 @@ trait DedupWinnow { this: Dedup.type =>
   def winnowPairs(spark: SparkSession, sfDir: String,
                   bits: Int = DefaultHashBits,
                   dfCap: Option[Int] = Some(WinnowDfCap)): DataFrame = {
-    import spark.implicits._
     val fps = Materialize.shared(spark, winnowFingerprintRows(spark, sfDir, bits))
     val counts = fps.groupBy("doc_id").agg(count(lit(1)).as("nfp"))
-    // round 16 (guide §2.4, the q72/q170 aggregate-emission discipline):
-    // the capped arm — the default, and the only one q128 benches —
-    // replaces [df agg + cap join + self-equi-join on fp + pair agg]
-    // with ONE fp-keyed aggregation whose buffer is the memory-bounded
+    // The capped arm — the default, and the only one q128 benches — is
+    // ONE fp-keyed aggregation whose buffer is the memory-bounded
     // CappedLongSet (NULL over cap = exactly the dfCap drop rule: df
     // here is distinct docs per fp, and fps is distinct per (doc, fp)),
-    // followed by map-side C(docs,2) pair emission collapsed by partial
-    // aggregation. Two exchanges instead of four, no join, and the
-    // boilerplate hot-fingerprint buffer physically stops at cap+1.
-    // The uncapped arm keeps the classic inverted-index self-join (an
-    // uncapped collect would be an unbounded aggregation buffer);
-    // WinnowDfCapSpec pins capped == uncapped where the cap never bites.
+    // then PairCounts at the session shuffle width: two exchanges, no
+    // join, and a boilerplate fingerprint's buffer stops at cap+1. The
+    // uncapped arm keeps the inverted-index self-join (an uncapped
+    // collect would be an unbounded aggregation buffer); WinnowDfCapSpec
+    // pins capped == uncapped where the cap never bites.
     val pairs0 = dfCap match {
       case Some(cap) =>
         val cappedDocs = org.apache.spark.sql.graft.Bridge.column(
           graft.functions.CappedLongSet(
             org.apache.spark.sql.graft.Bridge.expression(col("doc_id")),
             cap).toAggregateExpression())
-        // round 16 follow-up: the first aggregate-emission form (typed
-        // flatMap straight off the agg output) read 208.98 s / exp 1.73
-        // at the f=512 decade — over the 1.3 gate — because the
-        // emission AND its pair partial-agg ran at the agg output's
-        // byte-proportional width while the WORK is fan-out-amplified
-        // (Σ C(df,2) per vocab row): exactly the q72 hazard, plus a
-        // SerializeFromObject boundary per emitted pair. Fixes, both
-        // measured at the pinned f=512 corpus: the q72 explicit
-        // repartition to the session shuffle width (the cluster-sized
-        // knob; the exchange moves narrow (fp, docs) rows), and the
-        // q170 generator emission — posexplode + explode(slice) over
-        // the sorted capped set stays inside whole-stage codegen.
-        // CappedLongSet output is sorted ascending, so suffix pairing
-        // emits each unordered pair once with doc_a < doc_b.
-        fps.groupBy("fp").agg(cappedDocs.as("docs"))
+        val docSets = fps.groupBy("fp").agg(cappedDocs.as("docs"))
           .filter(col("docs").isNotNull)
-          .select(col("docs").as("s"))
+          .select(col("docs"))
           .repartition(spark.sessionState.conf.numShufflePartitions)
-          .select(col("s"), posexplode(col("s")))
-          .select(col("col").as("doc_a"),
-            explode(slice(col("s"), col("pos") + lit(2), size(col("s")))).as("doc_b"))
-          .groupBy("doc_a", "doc_b").agg(count(lit(1)).as("shared_fps"))
+        PairCounts(docSets, "docs")
+          .select(col("a").as("doc_a"), col("b").as("doc_b"), col("n").as("shared_fps"))
       case None =>
         val a = fps.select(col("doc_id").as("doc_a"), col("fp"))
         val b = fps.select(col("doc_id").as("doc_b"), col("fp"))

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.core.Tables
 import graft.functions.ExactSums._
+import graft.functions.PairCounts
 
 /** Event-time operators over the `events` table: tumbling/sliding
   * windows, gap sessionization, as-of join, and typed pivots.
@@ -452,7 +453,7 @@ object Events {
   //    bandCap/dfCap discipline: a viral hour is boilerplate, not
   //    affinity; the cap provably never bites on the oracle corpora,
   //    max cell size 51 at sf0.1) is a size() predicate on that set,
-  //    and each cell's C(n,2) sorted pairs are EMITTED by a flatMap
+  //    and each cell's C(n,2) sorted pairs are EMITTED by PairCounts
   //    and collapsed by partial aggregation before the pair shuffle —
   //    the pair volume exists only transiently inside map tasks. This
   //    replaced a window-cap + self-equi-join + groupBy(a,b) chain
@@ -475,12 +476,11 @@ object Events {
   val CoVisitCellCap = 64L
 
   /** The un-checkpointed mutual-edge half of q170 (events → capped
-    * cells → pair flatMap → directed top-K → mutual filter) — exposed
+    * cells → [[PairCounts]] → directed top-K → mutual filter) — exposed
     * as a seam so PlanAuditSpec can pin the pair-generation plan shape
     * that [[coVisitTriangles]]'s answer-sized checkpoint truncates out
     * of the final report's lineage. */
   private[graft] def coVisitMutualEdges(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
     // the cap is a MEMORY guard, not just a semantic rule, so it must
     // bind DURING aggregation: a collect_set-then-size() form builds
     // the viral cell's unbounded (and non-spillable) buffer just to
@@ -499,23 +499,9 @@ object Events {
       .groupBy("event_type", "hour_id")
       .agg(cappedUsers.as("users"))
       .filter(col("users").isNotNull)
-    // round 16 (guide §4): pair emission as pure-codegen generators —
-    // sort_array + posexplode + explode(slice(s, pos+2, size)) — in
-    // place of the typed flatMap, which paid a SerializeFromObject
-    // boundary and a Tuple2 allocation per pair. At the f=64
-    // amplified decade: 13.56 → 12.45 s (min-of-2) on the mutual-edge
-    // half, with tighter pass-to-pass spread (12.45/12.49 vs
-    // 13.56/15.53); identical 224,448-row edge set. The slice per
-    // (cell, i) copies only the suffix array — O(pairs) elements
-    // total, the same volume the flatMap emitted, with the cell cap
-    // bounding every per-row array at C(64,2).
-    val pairRows = byCell
-      .select(sort_array(col("users")).as("s"))
-      .select(col("s"), posexplode(col("s")))
-      .select(col("col").as("a"),
-        explode(slice(col("s"), col("pos") + lit(2), size(col("s")))).as("b"))
-      .groupBy("a", "b")
-      .agg(count(lit(1)).as("ncells"))
+    // CappedLongSet output is sorted, so the cell sets feed the pair
+    // primitive as they are
+    val pairRows = PairCounts(byCell, "users").withColumnRenamed("n", "ncells")
     // The duplicate-consumer subtrees below (the triangle join's three
     // oriented aliases) deliberately ride EXCHANGE REUSE, not
     // persist(): measured at sf0.1, caching the pair frame poisons
@@ -572,9 +558,9 @@ object Events {
     // plan-inspection mode (Materialize.withoutEagerness) must stay
     // job-free: localCheckpoint(true) executes at CONSTRUCTION time,
     // which withoutEagerness cannot suppress — fall back to the lazy
-    // un-checkpointed lineage there (ADVICE r15)
+    // un-checkpointed lineage there
     val und =
-      if (!Materialize.eagerEnabled) coVisitMutualEdges(spark, sfDir)
+      if (!Materialize.eagerEnabled(spark)) coVisitMutualEdges(spark, sfDir)
       else Materialize.tracked(spark,
         coVisitMutualEdges(spark, sfDir).localCheckpoint(true))
     // degree via ONE window over the bidirectional frame (no deg join):

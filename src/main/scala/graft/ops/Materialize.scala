@@ -1,7 +1,6 @@
 package graft.ops
 
 import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
-import java.util.concurrent.atomic.AtomicBoolean
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.storage.StorageLevel
 
@@ -23,8 +22,9 @@ import org.apache.spark.storage.StorageLevel
   *
   * The eager count is a side effect at plan-CONSTRUCTION time, which is
   * wrong for plan inspection: `Explain` only wants the physical plan,
-  * not a full compute job. `withoutEagerness` turns `shared` into a
-  * plain pass-through (no persist, no count) for such callers.
+  * not a full compute job. `withoutEagerness(spark)` turns `shared`
+  * into a plain pass-through (no persist, no count) for that session
+  * only; other sessions of the same JVM keep materializing.
   *
   * `release(spark)` unpersists everything `shared` registered for that
   * session. Bench calls it after EVERY timed run (so pass 2 measures
@@ -37,10 +37,11 @@ object Materialize {
   // few and long-lived, and release() removes the entry
   private val registry =
     new ConcurrentHashMap[SparkSession, ConcurrentLinkedQueue[DataFrame]]()
-  private val eager = new AtomicBoolean(true)
+  // sessions inside withoutEagerness (plan inspection)
+  private val lazySessions = ConcurrentHashMap.newKeySet[SparkSession]()
 
   def shared(spark: SparkSession, df: DataFrame): DataFrame =
-    if (!eager.get()) df
+    if (!eagerEnabled(spark)) df
     else {
       val cached = df.persist(StorageLevel.MEMORY_AND_DISK)
       cached.count()
@@ -76,7 +77,7 @@ object Materialize {
     * the `withoutEagerness` plan-inspection mode). Builder thunks must
     * not call sharedKeyed themselves — see [[inKeyedBuild]]. */
   def sharedKeyed(spark: SparkSession, key: Any, df: => DataFrame): (DataFrame, Long) =
-    if (!eager.get()) (df, -1L)
+    if (!eagerEnabled(spark)) (df, -1L)
     else {
       require(!inKeyedBuild.get(),
         s"sharedKeyed builder thunk re-entered sharedKeyed (key=$key): " +
@@ -130,17 +131,16 @@ object Materialize {
     }
   }
 
-  /** Whether eager materialization is active — false only inside
-    * [[withoutEagerness]]. Operators that run a compute job at
-    * DataFrame-CONSTRUCTION time (q170's answer-sized localCheckpoint)
-    * consult this so plan inspection stays job-free (ADVICE r15). */
-  def eagerEnabled: Boolean = eager.get()
+  /** Whether eager materialization is active for `spark` — false only
+    * inside [[withoutEagerness]] on that session. Operators that run a
+    * compute job at DataFrame-CONSTRUCTION time (q170's answer-sized
+    * localCheckpoint) consult this so plan inspection stays job-free. */
+  def eagerEnabled(spark: SparkSession): Boolean = !lazySessions.contains(spark)
 
-  /** Run `body` with `shared` as a no-op (plan inspection, tests that
-    * assert on uncached plan shapes). Not re-entrancy-safe across
-    * concurrent sessions by design — only Explain uses it. */
-  def withoutEagerness[A](body: => A): A = {
-    eager.set(false)
-    try body finally eager.set(true)
-  }
+  /** Run `body` with `shared` as a no-op on `spark` (plan inspection,
+    * tests that assert on uncached plan shapes). Nests; other sessions
+    * are unaffected. */
+  def withoutEagerness[A](spark: SparkSession)(body: => A): A =
+    if (!lazySessions.add(spark)) body
+    else try body finally lazySessions.remove(spark)
 }

@@ -63,14 +63,7 @@ object PayloadStore {
     * pass over the chunks table — the UNTIMED build half of the
     * serving story, run from PreparedKnn's (re)prepare, which the
     * serving warmup triggers. Idempotent per stamp. */
-  /** Ops kill switch (and the A/B lever for measuring what the store
-    * buys): SPARK_GRAFT_PAYLOAD_STORE=0 disables builds, so every
-    * query serves through the parquet payload plan. */
-  private def enabled: Boolean =
-    sys.env.getOrElse("SPARK_GRAFT_PAYLOAD_STORE", "1") != "0"
-
   def build(spark: SparkSession, indexDir: String, stamp: Stamp): Unit = {
-    if (!enabled) return
     val key = (spark, indexDir)
     stores.get(key) match {
       case Some(s) if s.stamp == stamp => return

@@ -41,10 +41,7 @@ object EventStream {
   private def withReplayShufflePartitions[A](spark: org.apache.spark.sql.SparkSession)(body: => A): A = {
     val prev = spark.conf.get("spark.sql.shuffle.partitions")
     val prevNoData = spark.conf.get("spark.sql.streaming.noDataMicroBatches.enabled")
-    // width A/B-able without a recompile (round 16 profiling knob);
-    // the default stays the replay-sized 8 documented above
-    spark.conf.set("spark.sql.shuffle.partitions",
-      sys.env.getOrElse("SPARK_GRAFT_REPLAY_SHUFFLE", "8"))
+    spark.conf.set("spark.sql.shuffle.partitions", "8")
     // a BOUNDED complete-mode replay needs no trailing no-data
     // micro-batch (that batch exists to advance watermarks/timeouts on
     // a live stream); skipping it saves one full state-store

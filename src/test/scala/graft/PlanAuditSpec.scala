@@ -2,7 +2,8 @@ package graft
 
 import graft.ops.{Dedup, Relational, Sampling, Similarity}
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.catalyst.expressions.PosExplode
+import org.apache.spark.sql.execution.{GenerateExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 
@@ -485,15 +486,6 @@ class PlanAuditSpec extends SparkSpec {
     // one exchange) and pairs are emitted from the grouped sets
     assert(edgePlan.contains("ObjectHashAggregate") || edgePlan.contains("SortAggregate"),
       s"per-cell user sets must build through partial aggregation:\n$edgePlan")
-    // round 16: emission is pure-codegen generators (posexplode +
-    // explode(slice)) over the grouped sets — no typed boundary; a
-    // join-shaped emission reappearing would trip the cartesian/SMJ
-    // guards, and a reverted flatMap would reintroduce the
-    // SerializeFromObject this assertion now rejects
-    assert(edgePlan.contains("Generate"),
-      s"pair emission must be generator-based over grouped cells:\n$edgePlan")
-    assert(!edgePlan.contains("SerializeFromObject"),
-      s"pair emission regressed to the typed flatMap boundary:\n$edgePlan")
     val df = graft.ops.Events.coVisitTriangles(spark, sf0001)
     df.collect()
     val nodes = flatten(df.queryExecution.executedPlan)
@@ -522,15 +514,37 @@ class PlanAuditSpec extends SparkSpec {
       s"pair generation must ride the bounded set aggregate:\n$plan")
     assert(!plan.contains("SortMergeJoin"),
       s"fp self-join reappeared in the capped arm:\n$plan")
-    // round 16 follow-up (f=512 decade fix): emission is generator-
-    // based (posexplode + explode(slice)) behind an explicit
-    // round-robin repartition — the fan-out-amplified stage must not
-    // run at the agg output's byte-proportional width (209 s → 79 s at
-    // f=512, exp 1.73 → 1.19)
-    assert(plan.contains("Generate"),
-      s"pair emission must be generator-based over the capped sets:\n$plan")
+    // the fan-out-amplified emission stage must not run at the agg
+    // output's byte-proportional width (209 s → 79 s at f=512, exp
+    // 1.73 → 1.19)
     assert(plan.contains("RoundRobinPartitioning") || plan.contains("ROUND_ROBIN"),
       s"the emission stage lost its explicit corpus-knob repartition:\n$plan")
+  }
+
+  test("q15/q72/q128/q170: every pair site emits through the PairCounts generators") {
+    // (query, plan, whether the pair stream must be free of typed
+    // operators). q15 keeps its typed posting scan ahead of the
+    // primitive; q72's plan above its cached source sets is all
+    // codegen. Nodes come from children only, so a cached relation's
+    // own lineage is not part of the audited plan.
+    val sites = Seq(
+      ("q15", Dedup.jaccardPairsSparse(spark, sf0001), false),
+      ("q72", Dedup.sourceOverlap(spark, sf0001), true),
+      ("q128", Dedup.winnowPairs(spark, sf0001, Dedup.OracleHashBits), false),
+      ("q170", graft.ops.Events.coVisitMutualEdges(spark, sf0001), true))
+    val breaches = try sites.flatMap { case (q, df, codegenOnly) =>
+      df.collect()
+      val nodes = flatten(df.queryExecution.executedPlan)
+      val generated = nodes.exists {
+        case g: GenerateExec => g.generator.isInstanceOf[PosExplode]
+        case _ => false
+      }
+      val typed = nodes.exists(n => Set("SerializeFromObject", "MapPartitions")(n.nodeName))
+      Seq(s"$q: no posexplode generator" -> !generated,
+          s"$q: a typed boundary in the pair stream" -> (codegenOnly && typed))
+        .collect { case (msg, true) => s"$msg:\n${df.queryExecution.executedPlan}" }
+    } finally graft.ops.Materialize.release(spark)
+    assert(breaches.isEmpty, breaches.mkString("\n"))
   }
 
   test("q33: norms ride the bucket rows and the query side's doc_id filter reaches parquet") {
