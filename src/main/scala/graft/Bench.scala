@@ -88,11 +88,6 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val warmDir = sys.env.getOrElse("SPARK_GRAFT_WARMUP_DIR", "/root/testdata/sf0.001")
     val spark = Harness.session(Harness.Batch)
-    // SPARK_GRAFT_AQE=0 pins static plans, =1 pins adaptive; unset
-    // keeps Spark's default (adaptive since 3.2). AqeParitySpec proves
-    // the two modes are row-identical across every declared query.
-    sys.env.get("SPARK_GRAFT_AQE").foreach(v =>
-      spark.conf.set("spark.sql.adaptive.enabled", (v != "0").toString))
     val timer = new Harness.Timer(spark)
     // a failed warm-up or prepare ends the run before any timed line:
     // a timed line must never describe a half-prepared session
@@ -184,10 +179,10 @@ object Bench {
     val total = results.collect { case (_, v, true, _, _) => v }.sum
     // record the optimizer mode the numbers describe: adaptive (AQE) is
     // Spark's default since 3.2 and the deployed configuration at scale;
-    // AqeParitySpec proves both modes row-identical, so the mode is a
-    // measurement label, not a semantics switch
-    val aqe = sys.env.get("SPARK_GRAFT_AQE")
-      .map(v => (v != "0").toString).getOrElse("default")
+    // -Dspark.sql.adaptive.enabled=false pins static plans. AqeParitySpec
+    // proves both modes row-identical, so the mode is a measurement
+    // label, not a semantics switch
+    val aqe = spark.conf.get("spark.sql.adaptive.enabled")
     println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"gcMs":$gcs,"retried":$retried,"errors":$errors,"aqe":"$aqe","sf":"$sfDir"}""")
     // compact summary LAST (VERDICT r12 harness nit): the driver's
     // bounded tail-capture truncates the FRONT of long lines, which ate

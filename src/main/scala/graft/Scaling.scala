@@ -285,10 +285,10 @@ object Scaling {
     val queriesRun = queries.filter { case (n, _) => only.forall(_.contains(n)) }
     // a real cluster scales partition count with the corpus; the
     // fixed-32 default here means upper decades run with growing
-    // per-task working sets — overridable to separate that
-    // measurement-regime effect from true plan growth
+    // per-task working sets — -Dspark.sql.shuffle.partitions=N
+    // separates that measurement-regime effect from true plan growth
     val spark = Harness.session(Harness.Batch, master = "local[32]",
-      shufflePartitions = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "32"))
+      shufflePartitions = "32")
 
     // warm-cell discipline (round 15, VERDICT r14 item 3): the first
     // timed cells after an untimed multi-GB tmpfs corpus write read
@@ -361,9 +361,15 @@ object Scaling {
     }
 
     // JIT warmup on the smallest decade so factor-1 timings aren't
-    // charged for codegen compilation
-    queriesRun.foreach { case (_, fn) =>
-      try { fn(spark, dirs.head._2).count(); () } catch { case _: Throwable => () }
+    // charged for codegen compilation; a query that fails here would
+    // fail its timed cells too, so the run ends now, naming it
+    queriesRun.foreach { case (name, fn) =>
+      try fn(spark, dirs.head._2).count()
+      catch {
+        case scala.util.control.NonFatal(e) =>
+          System.err.println(s"scaling: warm-up of $name FAILED: $e")
+          spark.stop(); sys.exit(1)
+      }
       graft.ops.Materialize.release(spark)
     }
 
@@ -428,7 +434,10 @@ object Scaling {
       import scala.jdk.CollectionConverters._
       java.nio.file.Files.walk(root).iterator().asScala.toSeq.reverse
         .foreach(p => { java.nio.file.Files.deleteIfExists(p); () })
-    } catch { case _: Throwable => () }
+    } catch {
+      // the walk wraps its I/O failures unchecked
+      case _: java.io.IOException | _: java.io.UncheckedIOException => ()
+    }
     spark.stop()
     if (fail) {
       System.err.println(s"scaling: top-decade exponent above $MaxExponent")

@@ -100,23 +100,31 @@ object AnnIndex {
   def hasIdBucket(spark: SparkSession, path: String): Boolean = {
     val cached = idBucketLayout.get(path)
     if (cached != null) cached.booleanValue()
-    else
-      try {
-        val v = spark.read.parquet(s"$path/chunks").columns.contains("idbucket")
-        idBucketLayout.put(path, v)
-        v
-      } catch {
-        // a genuinely ABSENT table means this append creates it: the
-        // modern layout is the right default (and nothing is cached —
-        // a verdict must come from an actual read). An EXISTING but
-        // unreadable table is a different animal: guessing a layout
-        // could write mixed partition depths into it, so fail the
-        // append loudly (the stream retries its batch) instead
-        case e: org.apache.spark.sql.AnalysisException =>
-          if (!java.nio.file.Files.exists(
-              java.nio.file.Paths.get(path, "chunks"))) true
-          else throw e
-      }
+    // a table with no data yet means this append creates it: the
+    // modern layout is the right default (and nothing is cached — a
+    // verdict must come from an actual read). An EXISTING but
+    // unreadable table fails the read loudly (the stream retries its
+    // batch): guessing a layout could write mixed partition depths
+    else if (noTable(s"$path/chunks")) true
+    else {
+      val v = spark.read.parquet(s"$path/chunks").columns.contains("idbucket")
+      idBucketLayout.put(path, v)
+      v
+    }
+  }
+
+  /** The chunks table's partition columns in the live layout. */
+  def chunkPartitionCols(spark: SparkSession, path: String): Seq[String] =
+    if (hasIdBucket(spark, path)) Seq("language", "idbucket") else Seq("language")
+
+  /** True while the parquet dir holds no table: absent, or the empty
+    * directory an all-rows-purged swap leaves behind. */
+  private def noTable(dir: String): Boolean = {
+    val p = java.nio.file.Paths.get(dir)
+    !java.nio.file.Files.isDirectory(p) || {
+      val ls = java.nio.file.Files.list(p)
+      try !ls.findAny().isPresent finally ls.close()
+    }
   }
 
   /** Chunks are written partitioned by (language, idbucket): language
@@ -327,52 +335,67 @@ object AnnIndex {
   def hasPlanes(path: String): Boolean =
     java.nio.file.Files.exists(java.nio.file.Paths.get(path, "planes"))
 
+  /** The one append of index maintenance (refresh-index's wave, each
+    * watcher batch), run by the caller under the maintenance lock.
+    * `rows` (chunk-row columns, ids already assigned) are bucketed to
+    * the LIVE layout — mixing idbucket-partitioned and language-only
+    * layouts would leave the table unreadable — and appended to
+    * chunks/; when the index persists its planes, their forest leaf
+    * rows append to forest/ in the EXISTING forest's schema: a
+    * pre-metadata forest must stay uniformly metadata-free, because
+    * filter translation (plans.AnnPushdown) evaluates re-targeted
+    * predicates against forest rows, and mixed generations would read
+    * old rows' metadata as null and silently drop every pre-upgrade
+    * chunk from filtered ANN results. Leaf assignment uses the
+    * PERSISTED planes, so old and new assignments agree. An empty wave
+    * writes nothing. */
+  private[graft] def appendWave(spark: SparkSession, path: String, rows: DataFrame): Unit =
+    if (!rows.isEmpty) {
+      val parts = chunkPartitionCols(spark, path)
+      val wave =
+        if (parts.contains("idbucket")) withIdBucket(rows, ensurePayloadBuckets(path))
+        else rows
+      wave.write.mode("append").partitionBy(parts: _*).parquet(s"$path/chunks")
+      if (hasPlanes(path)) {
+        val newRows = buildForestIndex(wave, loadPlanes(spark, path))
+        val forestDir = s"$path/forest"
+        val existingCols =
+          if (noTable(forestDir)) newRows.columns.toSet
+          else spark.read.parquet(forestDir).columns.toSet
+        newRows.select(newRows.columns.filter(existingCols.contains).map(col).toSeq: _*)
+          .write.mode("append").partitionBy("tree", "leaf").parquet(forestDir)
+      }
+    }
+
   /** Compact the chunks table after incremental appends: every
     * micro-batch append writes its own small parquet files, and small
     * files are the classic slow poison of a streaming-maintained table
     * (one scan task per file, metadata pressure). Rewrites the table —
-    * one shuffle keyed on the partition column, one file per language
-    * partition (at real scale, add a bucket-salt column sized by
-    * target file bytes to emit N size-bounded files instead) — into a
-    * fresh directory, then atomically swaps it in. Returns the number
-    * of data files after compaction.
+    * one shuffle keyed on the partition columns, one file per
+    * partition dir (at real scale, add a bucket-salt column sized by
+    * target file bytes to emit N size-bounded files instead) — through
+    * the journaled swap refresh-index uses (ChatPipeline.rewriteSwap),
+    * so a crash between its renames is repaired like any other swap.
+    * Returns the number of data files after compaction.
     *
-    * MUST run with the incremental stream quiesced (stopped, or
-    * between `processAllAvailable` rounds): an append landing between
-    * the snapshot read and the swap would be moved out with the old
-    * generation and deleted. A real lakehouse table (snapshot
-    * isolation, e.g. the Iceberg/Delta protocol) is the right answer
-    * at scale; plain parquet directories have no transaction log, so
-    * the quiesce contract is the honest local equivalent. */
-  def compactChunks(spark: SparkSession, path: String): Long = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    val live = Paths.get(path, "chunks")
-    val tmp = Paths.get(path, s"chunks_compact_${System.nanoTime()}")
-    val df = spark.read.parquet(live.toString)
-    val parts =
-      if (df.columns.contains("idbucket")) Seq("language", "idbucket")
-      else Seq("language")
-    df.repartition(parts.map(col): _*)
-      .write.mode("overwrite").partitionBy(parts: _*)
-      .parquet(tmp.toString)
-    val old = Paths.get(path, s"chunks_old_${System.nanoTime()}")
-    Files.move(live, old, StandardCopyOption.ATOMIC_MOVE)
-    Files.move(tmp, live, StandardCopyOption.ATOMIC_MOVE)
-    // cleanup of the replaced generation (close directory streams —
-    // they hold file descriptors)
-    def rm(p: java.nio.file.Path): Unit = {
-      if (Files.isDirectory(p)) {
-        val children = Files.list(p)
-        try children.forEach(c => rm(c)) finally children.close()
-      }
-      Files.deleteIfExists(p)
-    }
-    rm(old)
-    invalidateServing(path)
-    val walk = Files.walk(live)
-    try walk.filter(_.toString.endsWith(".parquet")).count()
-    finally walk.close()
-  }
+    * Runs under the index maintenance lock: a watcher batch appends
+    * under the same lock, so no append can land between the snapshot
+    * read and the swap (it waits, then appends to the compacted
+    * table); like every mutator, a lock wait past its bound fails
+    * loudly. */
+  def compactChunks(spark: SparkSession, path: String): Long =
+    ChatPipeline.withIndexLock(path) {
+      ChatPipeline.repairSwap(s"$path/chunks")
+      val parts = chunkPartitionCols(spark, path)
+      ChatPipeline.rewriteSwap(spark, s"$path/chunks", parts,
+        _.repartition(parts.map(col): _*))
+      ChatPipeline.indexChanged(spark, path)
+      val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(path, "chunks"))
+      try walk.filter(_.toString.endsWith(".parquet")).count()
+      finally walk.close()
+    }.getOrElse(throw new IllegalStateException(
+      s"another live session holds the maintenance lock for '$path' — " +
+        "compaction aborted"))
 
   /** Query-side leaf ids, one per tree (driver-side tiny compute). */
   def queryLeaves(query: Array[Float], forest: Array[Array[Array[Float]]]): Seq[(Int, Long)] =

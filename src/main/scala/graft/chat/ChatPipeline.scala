@@ -77,11 +77,7 @@ object ChatPipeline {
       contentHash = rollupHash(manifest),
       nChunks = n,
       contentMode = if (refContent) "ref" else "default"), outDir)
-    // a rebuild supersedes any TTL'd freshness verdict, any pinned
-    // serving listing, and any registered catalog entry for this index
-    AnnIndex.invalidateServing(outDir)
-    graft.plans.AnnCatalog.refreshIfRegistered(spark, outDir)
-    checkTime.remove(outDir)
+    indexChanged(spark, outDir)
     n
   }
 
@@ -140,7 +136,6 @@ object ChatPipeline {
             rerank: Boolean = false,
             client: ChatClient = new MockChatClient(),
             embedder: Embedder = new HashingEmbedder(),
-            approx: Boolean = false,
             reranker: Option[Reranker] = None,
             prepared: Boolean = true): QueryOutput = {
     // proposals.md:70-73 (automatic check on query): warn — never
@@ -165,18 +160,10 @@ object ChatPipeline {
     // bit-identical results to the rule-rewritten DataFrame path below
     // (PreparedKnnSpec), at a fraction of the per-query planning cost.
     val window: Seq[Retrieval.LocalHit] =
-      (if (prepared && !approx)
+      (if (prepared)
         graft.plans.PreparedKnn.search(spark, indexDir, qVec, k * 2)
       else None).getOrElse {
-        val chunks = AnnIndex.loadServing(spark, indexDir)
-        val hits0 =
-          if (approx) {
-            // the persisted planes are authoritative — never re-sample
-            // from the live count, which drifts after incremental appends
-            val forest = AnnIndex.loadPlanes(spark, indexDir)
-            val idx = spark.read.parquet(s"$indexDir/forest")
-            AnnIndex.knnApprox(spark, chunks, idx, forest, qVec, k * 2)
-          } else AnnIndex.knnExact(chunks, qVec, k * 2)
+        val hits0 = AnnIndex.knnExact(AnnIndex.loadServing(spark, indexDir), qVec, k * 2)
         // materialize the over-fetch window ONCE: everything past F1 is
         // a presentation stage over <= 2k rows (the reference filters
         // its fetched window driver-side too, hyde.rs:976-1214), and
@@ -521,14 +508,22 @@ object ChatPipeline {
   private val checkTime =
     new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
 
-  /** Every index MUTATOR calls this: a TTL'd verdict must never
-    * outlive the state it described (rebuild, refresh, incremental
-    * append). The epoch counter closes the check-then-act window — a
-    * query thread that computed its verdict from PRE-mutation state
-    * must not re-arm the TTL clock after the mutator cleared it. */
+  /** Bumped by every index mutation ([[indexChanged]]): a TTL'd
+    * verdict must never outlive the state it described. The epoch
+    * closes the check-then-act window — a query thread that computed
+    * its verdict from PRE-mutation state must not re-arm the TTL clock
+    * after the mutator cleared it. */
   private val freshnessEpoch =
     new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-  private[graft] def invalidateFreshness(indexDir: String): Unit = {
+
+  /** The index at `indexDir` changed (build, refresh, a watcher batch,
+    * compaction): drop every in-process view of it — the pinned serving
+    * listing, a registered catalog entry with its prepared plans (their
+    * file listings name appended or deleted files), and the TTL'd
+    * freshness verdict. */
+  private[graft] def indexChanged(spark: SparkSession, indexDir: String): Unit = {
+    AnnIndex.invalidateServing(indexDir)
+    graft.plans.AnnCatalog.refreshIfRegistered(spark, indexDir)
     freshnessEpoch.merge(indexDir, 1L, (a, b) => a + b)
     checkTime.remove(indexDir)
   }
@@ -622,8 +617,8 @@ object ChatPipeline {
   // stream cannot do this), modified and new files re-chunk + re-embed,
   // the profile regenerates, and the freshness metadata re-stamps.
   // Only changed files pay embedding cost; untouched chunks are
-  // rewritten (compaction-style tmp + atomic swap, the compactChunks
-  // discipline) but never re-embedded.
+  // rewritten (tmp + journaled atomic swap, [[rewriteSwap]], which
+  // compaction shares) but never re-embedded.
   // -------------------------------------------------------------------
 
   case class RefreshStats(purgedFiles: Long, purgedChunks: Long,
@@ -792,7 +787,8 @@ object ChatPipeline {
     ()
   }
 
-  /** Rewrite a parquet dir keeping only `keep` rows: write tmp, swap
+  /** Rewrite a parquet dir as `keep` of its rows (refresh's purge,
+    * compaction's repartition): write tmp, swap
     * atomically, drop the old generation (read-and-overwrite of the
     * same live path would race the lazy scan). The two renames are not
     * jointly atomic, so a journal written BEFORE the first move makes a
@@ -802,7 +798,7 @@ object ChatPipeline {
     * would fail to infer): callers appending new rows right after —
     * the only legal next step, [[refreshIndex]] guards the
     * would-stay-empty case — write the first data files. */
-  private def rewriteSwap(spark: SparkSession, dir: String,
+  private[graft] def rewriteSwap(spark: SparkSession, dir: String,
                           partitionCols: Seq[String],
                           keep: DataFrame => DataFrame): Unit = {
     import java.nio.file.{Files, Paths, StandardCopyOption}
@@ -878,15 +874,6 @@ object ChatPipeline {
       s"another live session holds the maintenance lock for '$indexDir' — " +
         "cannot allocate a chunk-id generation"))
 
-  /** changed-file count above which [[refreshIndex]] re-chunks and
-    * re-embeds through the DISTRIBUTED path the full build uses
-    * (binaryFile scan + partitioned embed) instead of driver-side file
-    * reads: a repair wave of a few edits is driver work by nature, but
-    * a large-scale change (a vendored tree, a sweeping reformat) must
-    * not degenerate to single-process embedding while the rebuild path
-    * is distributed. */
-  val RefreshDistributedThreshold = 64
-
   /** Bring a stale index back to fresh: diff the current repo manifest
     * against the indexed view (build manifest + incremental processed
     * log), purge changed/deleted files' chunks from chunks/ and their
@@ -895,14 +882,13 @@ object ChatPipeline {
     * re-chunk + re-embed only the changed/new files (fresh ids above
     * every existing generation, via the [[nextGeneration]] high-water
     * mark the incremental stream shares), regenerate the profile, and
-    * re-stamp manifest + metadata. Changed-sets past
-    * [[RefreshDistributedThreshold]] re-embed through the distributed
-    * scan ([[distributedReindexRows]]); `forceDistributed` pins the
-    * path for equivalence testing. A no-op on a fresh index. After
+    * re-stamp manifest + metadata. A wave of any size takes one path:
+    * an explicit-path binaryFile scan of the changed files, the wave
+    * builder the watcher shares ([[embedWave]]) and the one append
+    * ([[AnnIndex.appendWave]]). A no-op on a fresh index. After
     * refresh, [[checkIndex]] reports fresh by construction. */
   def refreshIndex(spark: SparkSession, repoDir: String, indexDir: String,
-                   embedder: Embedder = new HashingEmbedder(),
-                   forceDistributed: Option[Boolean] = None): RefreshStats =
+                   embedder: Embedder = new HashingEmbedder()): RefreshStats =
     // the WHOLE repair — snapshot reads included — runs under the
     // maintenance lock: locking only the rename sections would let two
     // serialized refreshes both stage from the SAME pre-swap snapshot,
@@ -910,14 +896,13 @@ object ChatPipeline {
     // rewrite (lost update). The nested locked primitives
     // (repairSwap/nextGeneration/rewriteSwap) re-enter.
     withIndexLock(indexDir) {
-      refreshIndexLocked(spark, repoDir, indexDir, embedder, forceDistributed)
+      refreshIndexLocked(spark, repoDir, indexDir, embedder)
     }.getOrElse(throw new IllegalStateException(
       s"another live session holds the maintenance lock for '$indexDir' — " +
         "refresh aborted"))
 
   private def refreshIndexLocked(spark: SparkSession, repoDir: String,
-                                 indexDir: String, embedder: Embedder,
-                                 forceDistributed: Option[Boolean]): RefreshStats = {
+                                 indexDir: String, embedder: Embedder): RefreshStats = {
     import spark.implicits._
     repairSwap(s"$indexDir/chunks")
     repairSwap(s"$indexDir/forest")
@@ -939,38 +924,36 @@ object ChatPipeline {
 
     val root = java.nio.file.Paths.get(repoDir).toAbsolutePath
     val chunks = AnnIndex.load(spark, indexDir)
-    // repairs append in the LIVE layout (see IncrementalIndex: mixing
-    // idbucket-partitioned and plain-language layouts breaks the table)
-    val bucketed = chunks.columns.contains("idbucket")
-    val chunkParts =
-      if (bucketed) Seq("language", "idbucket") else Seq("language")
     val mx = chunks.agg(max(col("chunk_id"))).head()
     val genFloor = (if (mx.isNullAt(0)) 0L else mx.getLong(0) >> 32) + 1L
     val gen = nextGeneration(indexDir, genFloor, () => genFloor)
-    // re-chunk + re-embed the changed/new files FIRST (eager,
-    // localCheckpoint) — the empty-index guard below must know the
-    // actual chunk yield BEFORE any destructive purge runs: a wave of
-    // reindex files can legitimately yield zero chunks (truncated-to-
-    // empty or unsupported-extension replacements), and destroying the
-    // index before discovering that would leave nothing to load. Small
-    // waves read on the driver (the incremental stream's per-file
-    // granularity); large waves go through the same distributed scan
-    // the full rebuild uses.
-    val useDistributed = forceDistributed.getOrElse(
-      reindexFiles.size > RefreshDistributedThreshold)
-    // the repair wave must chunk in the SAME content mode the index
-    // was built with (index_meta.json content_mode stamp, round 15) —
-    // a default-mode repair of a ref-mode index would mix projections
-    val refC = indexRefContent(indexDir)
-    val rawRows =
-      (if (useDistributed) distributedReindexRows(spark, root, reindexFiles, gen, embedder, refC)
-       else driverReindexRows(spark, root, reindexFiles, gen, embedder, refC))
-        .localCheckpoint(true)
-    val rows =
-      if (bucketed)
-        AnnIndex.withIdBucket(rawRows, AnnIndex.ensurePayloadBuckets(indexDir))
-      else rawRows
+    // build the wave FIRST (eager, checkpointed by embedWave) — the
+    // empty-index guard below must know the actual chunk yield BEFORE
+    // any destructive purge runs: a wave of reindex files can
+    // legitimately yield zero chunks (truncated-to-empty or
+    // unsupported-extension replacements), and destroying the index
+    // before discovering that would leave nothing to load.
+    // Paths are loaded EXACTLY (scanning the whole repo and filtering
+    // down would read every file's bytes, making repair cost scale with
+    // repo size and tripping binaryFile's size limit on any unrelated
+    // huge artifact) and GLOB-ESCAPED (load() glob-interprets paths: a
+    // literal src/pages/[id].tsx would read as a character class and
+    // 'not exist'). A file deleted between the manifest diff and its
+    // read drops out of the wave (ignoreMissingFiles covers a deletion
+    // after the listing); the restamped manifest still names it, so
+    // the next check-index honestly reports stale again.
+    val livePaths = reindexFiles.map(root.resolve(_))
+      .filter(java.nio.file.Files.exists(_))
+      .map(_.toString.replaceAll("([{}\\[\\]*?\\\\])", "\\\\$1"))
+    val files =
+      if (livePaths.isEmpty) Seq.empty[(String, Array[Byte])].toDF("path", "content")
+      else spark.read.format("binaryFile").option("ignoreMissingFiles", "true")
+        .load(livePaths: _*)
+    val rows = embedWave(spark, files, root.toString, indexDir, gen, embedder)
     val addedChunks = rows.count()
+    // the live layout, read before any swap (also primes the layout
+    // verdict appendWave reuses once the purge may have emptied chunks/)
+    val chunkParts = AnnIndex.chunkPartitionCols(spark, indexDir)
     var purgedChunks = 0L
     if (purgeFiles.nonEmpty) {
       val purgeDf = broadcast(purgeFiles.toDF("file"))
@@ -1000,26 +983,13 @@ object ChatPipeline {
             df => df.join(broadcast(purgedIds), Seq("chunk_id"), "left_anti"))
       }
     }
-    if (addedChunks > 0L) {
-      rows.write.mode("append").partitionBy(chunkParts: _*)
-        .parquet(s"$indexDir/chunks")
-      if (AnnIndex.hasPlanes(indexDir)) {
-        val forest = AnnIndex.loadPlanes(spark, indexDir)
-        val newRows = AnnIndex.buildForestIndex(rows, forest)
-        val existingCols =
-          try spark.read.parquet(s"$indexDir/forest").columns.toSet
-          catch { case _: Exception => newRows.columns.toSet }
-        newRows.select(newRows.columns.filter(existingCols.contains)
-            .map(col).toSeq: _*)
-          .write.mode("append").partitionBy("tree", "leaf")
-          .parquet(s"$indexDir/forest")
-      }
-    }
+    AnnIndex.appendWave(spark, indexDir, rows)
+    org.apache.spark.sql.graft.Bridge.unpersistCheckpoint(rows)
     // profile + freshness re-stamp: the refreshed index describes the
     // CURRENT repo state, manifest included; the processed log is
     // superseded
-    val files = filesFrame(spark, repoDir)
-    writeProfileJson(Profile.profile(files, repoDir.split('/').last),
+    val profileFiles = filesFrame(spark, repoDir)
+    writeProfileJson(Profile.profile(profileFiles, repoDir.split('/').last),
       s"$indexDir/profile.json")
     writeHashLines(
       java.nio.file.Paths.get(s"$indexDir/index_manifest.tsv"), cur)
@@ -1032,112 +1002,34 @@ object ChatPipeline {
       sourceCommitHash = gitCommitHash(repoDir),
       contentHash = rollupHash(cur),
       nChunks = n,
-      contentMode = if (refC) "ref" else "default"), indexDir)
-    // a registered serving session must not keep the pre-refresh forest
-    // listing (its files were just rewritten away), and the freshness
-    // TTL must not serve a pre-refresh verdict for the repaired index
-    graft.plans.AnnCatalog.refreshIfRegistered(spark, indexDir)
-    AnnIndex.invalidateServing(indexDir)
-    checkTime.remove(indexDir)
+      contentMode = if (indexRefContent(indexDir)) "ref" else "default"), indexDir)
+    indexChanged(spark, indexDir)
     RefreshStats(purgeFiles.size.toLong, purgedChunks,
       reindexFiles.size.toLong, addedChunks)
   }
 
-  /** Small-wave reindex rows: driver file reads + batched embed, the
-    * incremental stream's granularity. Chunk ids are (gen << 32) | seq
-    * with seq dense over (file asc, intra-file chunk order) — the SAME
-    * contract [[distributedReindexRows]] reproduces, so the two paths
-    * yield identical indexes for a per-text-deterministic embedder. */
-  private def driverReindexRows(spark: SparkSession, root: java.nio.file.Path,
-                                reindexFiles: Seq[String], gen: Long,
-                                embedder: Embedder,
-                                refContent: Boolean = false): DataFrame = {
+  /** The wave builder of index maintenance, shared by refresh-index and
+    * the incremental watcher: a `(path, content)` frame of files under
+    * `root`, as the binaryFile source yields it, is chunked through
+    * [[Chunker.fileChunkRows]] in the content mode the index was built
+    * with (the index_meta.json stamp — a repair wave must not mix
+    * content projections), embedded through [[Embed.embedChunks]] with
+    * generation-`gen` ids, and checkpointed, so counting, the chunks
+    * append and the forest rows never re-run the embed. The caller
+    * releases the checkpoint (Bridge.unpersistCheckpoint). */
+  private[graft] def embedWave(spark: SparkSession, files: DataFrame, root: String,
+                               indexDir: String, gen: Long,
+                               embedder: Embedder): DataFrame = {
     import spark.implicits._
-    // a file deleted between the manifest diff and this read simply
-    // drops out of the wave (the restamped manifest still names it, so
-    // the next check-index honestly reports stale again) — aborting the
-    // whole repair on one vanished file would leave nothing repaired
-    val newChunks = reindexFiles.sorted
-      .filter(rel => java.nio.file.Files.exists(root.resolve(rel)))
-      .flatMap { rel =>
-        // the exists filter above has a TOCTOU window: a file deleted
-        // between it and this read must STILL drop out of the wave —
-        // aborting the whole repair on one vanished file is exactly
-        // what the contract forbids
-        try Chunker.fileChunkRows(rel,
-            new String(java.nio.file.Files.readAllBytes(root.resolve(rel)),
-              java.nio.charset.StandardCharsets.UTF_8), refContent = refContent)
-          .map { case (r, _, c, lang, e) => (r, c, lang, e) }
-        catch { case _: java.nio.file.NoSuchFileException => Seq.empty }
+    val refContent = indexRefContent(indexDir)
+    val chunks = files.select(col("path"), col("content")).as[(String, Array[Byte])]
+      .flatMap { case (uri, bytes) =>
+        val rel = uri.stripPrefix("file:").stripPrefix(root).dropWhile(_ == '/')
+        Chunker.fileChunkRows(rel,
+            new String(bytes, java.nio.charset.StandardCharsets.UTF_8), refContent)
+          .map { case (r, _, c, lang, e) => CodeChunk(r, c, lang, e) }
       }
-    val vecs = newChunks.grouped(32).flatMap { g =>
-      embedder.embedBatch(g.map(_._2))
-    }.toSeq
-    newChunks.zip(vecs).zipWithIndex.map {
-      case (((f, c, lang, e), v), i) =>
-        ((gen << 32) | i.toLong, f, c, lang, e, v.toSeq)
-    }.toDF("chunk_id", "file", "code", "language", "extension", "vector")
-  }
-
-  /** Large-wave reindex rows: the distributed form of
-    * [[driverReindexRows]] — binaryFile scan of the repo restricted to
-    * the changed set (broadcast semi-join on relative path), chunking
-    * in a flatMap, embedding in per-partition batches of 32 (the
-    * incremental stream's shape), and the id sequence re-derived by a
-    * global (file, intra-file order) sort + zipWithIndex so ids land
-    * exactly where the driver path would put them. Embedding batch
-    * COMPOSITION differs between the paths (global groups of 32 vs
-    * per-partition groups), which is observable only for an embedder
-    * whose vectors depend on batch context — the hashing embedder and
-    * any per-text-deterministic model are bit-identical. */
-  private def distributedReindexRows(spark: SparkSession, root: java.nio.file.Path,
-                                     reindexFiles: Seq[String], gen: Long,
-                                     embedder: Embedder,
-                                     refContent: Boolean = false): DataFrame = {
-    import spark.implicits._
-    val rootStr = root.toString
-    // load EXACTLY the changed files by explicit path — scanning the
-    // whole repo and semi-joining down would read every file's bytes
-    // first (binaryFile pushes down path filters, not joins), making
-    // repair cost scale with repo size instead of wave size and
-    // tripping binaryFile's size limit on any unrelated huge artifact.
-    // Paths are GLOB-ESCAPED (Spark's file listing glob-interprets
-    // load() paths — a literal src/pages/[id].tsx would otherwise be
-    // read as a character class and 'not exist'), and files deleted
-    // between the manifest diff and this read drop out of the wave
-    // (the driver path's contract; the restamped manifest keeps the
-    // vanished file, so the next check-index reports stale again)
-    def globEscape(p: String): String =
-      p.replaceAll("([{}\\[\\]*?\\\\])", "\\\\$1")
-    val livePaths = reindexFiles.map(rel => root.resolve(rel))
-      .filter(java.nio.file.Files.exists(_))
-      .map(p => globEscape(p.toString))
-    if (livePaths.isEmpty)
-      return Seq.empty[(Long, String, String, Option[String], Option[String], Seq[Float])]
-        .toDF("chunk_id", "file", "code", "language", "extension", "vector")
-    val files = spark.read.format("binaryFile")
-      .load(livePaths: _*)
-      .select(col("path"), col("content"))
-      .withColumn("rel",
-        regexp_replace(col("path"), s"^file:${java.util.regex.Pattern.quote(rootStr)}/?", ""))
-      .select(col("rel"), col("content").cast("string").as("text"))
-    val ref = refContent
-    val chunked = files.as[(String, String)].flatMap { case (rel, text) =>
-      Chunker.fileChunkRows(rel, text, refContent = ref)
-    }
-    val embedded = chunked.mapPartitions { it =>
-      it.grouped(32).flatMap { g =>
-        val vecs = embedder.embedBatch(g.map(_._3))
-        g.zip(vecs).map { case ((f, ci, c, lang, e), v) => (f, ci, c, lang, e, v.toSeq) }
-      }
-    }
-    embedded.rdd
-      .sortBy(r => (r._1, r._2))
-      .zipWithIndex()
-      .map { case ((f, _, c, lang, e, v), i) =>
-        ((gen << 32) | i, f, c, lang, e, v)
-      }
-      .toDF("chunk_id", "file", "code", "language", "extension", "vector")
+    Embed.embedChunks(spark, chunks, embedder, gen).toDF().localCheckpoint(true)
   }
 }
 

@@ -467,9 +467,9 @@ object Chunker {
     chunks.map(_.trim).filter(_.nonEmpty)
 
   /** The ONE "relative path + text → chunk rows" contract every
-    * indexing path shares (base build, incremental stream, refresh
-    * driver path, refresh distributed path): extension detect →
-    * supported filter → language detect → splitStructured, with the
+    * indexing path shares (base build; refresh-index and the
+    * incremental stream through ChatPipeline.embedWave): extension
+    * detect → supported filter → language detect → splitStructured, with the
     * intra-file chunk index preserved. `text` is by-name so callers
     * never decode bytes for unsupported extensions. Keeping this in one
     * place is what makes the byte-identical-across-paths guarantees

@@ -1,7 +1,7 @@
 package graft.chat
 
 import java.security.MessageDigest
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Dataset, SparkSession}
 import graft.chat.Schemas.{ChunkRow, CodeChunk}
 
 /** Embedding stage (reference: src/embedding.rs).
@@ -79,19 +79,26 @@ object Embedders {
 
 object Embed {
 
-  /** E2: batched embed over chunk rows, assigning stable chunk ids.
+  /** E2: batched embed over chunk rows, assigning stable chunk ids
+    * `(gen << 32) | i` with `i` dense over the input (the base build is
+    * generation 0; every repair wave and watcher batch gets its own
+    * generation from ChatPipeline.nextGeneration). Ids are assigned
+    * BEFORE the embed, so zipWithIndex's count job re-runs only the
+    * chunking and every chunk reaches `embedBatch` once per action.
     * One embedder instance per partition (executor-side lazy init, E1);
-    * grouped(32) batching preserves in-partition order. */
+    * grouped(32) batching preserves in-partition order. This is the
+    * one batched embed of the index writers. */
   def embedChunks(spark: SparkSession, chunks: Dataset[CodeChunk],
-                  embedder: Embedder = new HashingEmbedder()): Dataset[ChunkRow] = {
+                  embedder: Embedder = new HashingEmbedder(),
+                  gen: Long = 0L): Dataset[ChunkRow] = {
     import spark.implicits._
     chunks.rdd.zipWithIndex().toDF("chunk", "chunk_id")
       .as[(CodeChunk, Long)]
       .mapPartitions { it =>
         it.grouped(32).flatMap { batch =>
           val vecs = embedder.embedBatch(batch.map(_._1.content))
-          batch.zip(vecs).map { case ((c, id), v) =>
-            ChunkRow(id, c.file_path, c.content, c.language, c.extension, v)
+          batch.zip(vecs).map { case ((c, i), v) =>
+            ChunkRow((gen << 32) | i, c.file_path, c.content, c.language, c.extension, v)
           }
         }
       }

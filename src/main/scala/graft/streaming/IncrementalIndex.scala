@@ -4,7 +4,7 @@ import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import graft.chat.{AnnIndex, Embedder, HashingEmbedder, Language}
+import graft.chat.{AnnIndex, ChatPipeline, Embedder, HashingEmbedder, Language}
 
 /** Incremental re-indexing: the reference PROPOSES (but never built)
   * watching a repository for changes and updating the index without a
@@ -15,20 +15,20 @@ import graft.chat.{AnnIndex, Embedder, HashingEmbedder, Language}
   * chunks' RP-forest leaf assignments append to `forest/` in the same
   * batch, so approximate search stays complete after appends.
   *
-  * Chunk ids are (gen << 32 | rowInBatch) with rowInBatch from RDD
-  * zipWithIndex — partition-aware and dense, so rows in different
-  * partitions of one micro-batch can never collide (unlike
-  * monotonically_increasing_id, whose low 33 bits restart per
-  * partition) — and gen allocated from the index's persistent
-  * high-water counter (ChatPipeline.nextGeneration) floored at the
-  * stream's own batchId+1 sequence. Base-build ids (Embed.embedChunks
-  * zipWithIndex, < 2^32) have zero high bits; every batch and every
-  * refresh-index repair allocates a strictly higher generation from
-  * the SHARED counter — so a refresh landing between batches can never
-  * collide with a resumed watcher's next batch. Restarting the stream
-  * with the same checkpoint continues the batchId floor; a fresh
-  * checkpoint on the same index dir stays safe because the persistent
-  * counter, not the restarted batchId, is authoritative. */
+  * Each batch goes through the same wave builder and append as
+  * refresh-index (ChatPipeline.embedWave, AnnIndex.appendWave). Chunk
+  * ids are (gen << 32 | rowInBatch): rowInBatch comes from
+  * Embed.embedChunks' zipWithIndex — partition-aware and dense, so rows
+  * in different partitions of one micro-batch never collide — and gen
+  * from the index's persistent high-water counter
+  * (ChatPipeline.nextGeneration), floored at the stream's own
+  * batchId+1 sequence. The base build is generation 0; every batch and
+  * every refresh-index repair allocates a strictly higher generation
+  * from the SHARED counter, so a refresh landing between batches can
+  * never collide with a resumed watcher's next batch. Restarting the
+  * stream with the same checkpoint continues the batchId floor; a
+  * fresh checkpoint on the same index dir stays safe because the
+  * persistent counter, not the restarted batchId, is authoritative. */
 object IncrementalIndex {
 
   private val counter = new AtomicInteger(0)
@@ -38,12 +38,7 @@ object IncrementalIndex {
     * query handle (stop() to end; processAllAvailable() to drain). */
   def start(spark: SparkSession, watchDir: String, indexDir: String,
             embedder: Embedder = new HashingEmbedder()): StreamingQuery = {
-    import spark.implicits._
     val supported = Language.supportedExtensions.toSet
-    // chunk in the content mode the index was BUILT with (the
-    // index_meta.json content_mode stamp, round 15) — an append wave
-    // must not mix content projections into a ref-mode index
-    val refContent = graft.chat.ChatPipeline.indexRefContent(indexDir)
     // the streaming file source requires an explicit schema; this is
     // the fixed schema of the binaryFile format
     val binaryFileSchema = org.apache.spark.sql.types.StructType(Seq(
@@ -61,126 +56,58 @@ object IncrementalIndex {
     files.writeStream
       .queryName(name)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val rows = batch.as[(String, Array[Byte])].flatMap { case (uri, bytes) =>
-          val path = uri.stripPrefix("file:")
-          val rel = path.stripPrefix(watchDir).dropWhile(_ == '/')
-          // the ONE shared chunking contract (Chunker.fileChunkRows) —
-          // base build, refresh paths, and this stream cannot drift
-          graft.chat.Chunker.fileChunkRows(rel,
-              new String(bytes, java.nio.charset.StandardCharsets.UTF_8),
-              refContent = refContent)
-            .map { case (r, _, c, lang, e) => (r, c, lang, e) }
-        }.mapPartitions { it =>
-          it.grouped(32).flatMap { group =>
-            val vecs = embedder.embedBatch(group.map(_._2))
-            group.zip(vecs).map { case ((f, c, lang, e), v) => (f, c, lang, e, v.toSeq) }
-          }
-        }
-        // ids disjoint from any prior batch or the base build:
-        // zipWithIndex is partition-aware (global dense row numbers),
-        // unlike monotonically_increasing_id whose per-partition low
-        // bits collide across partitions of the same batch. Cache the
-        // embedded rows FIRST: zipWithIndex runs an internal count job
-        // over its parent, which would otherwise run chunk+embed twice
-        // per batch (embedding is the dominant cost with a real model)
-        val rowsRdd = rows.rdd.cache()
-        // gen allocation + the chunks/forest appends run as ONE locked
-        // mutation: an append interleaving with a refresh's rewriteSwap
+        // gen allocation, the wave, the chunks/forest append and the
+        // processed log run as ONE locked mutation: an append
+        // interleaving with a refresh's or a compaction's rewriteSwap
         // could land files in a directory mid-rename. The lock is
         // reentrant, so the nested nextGeneration acquires nothing new;
-        // a timeout fails the batch loudly and the stream retries it.
-        val withIds = graft.chat.ChatPipeline.withIndexLock(indexDir) {
-        // generation from the index's shared high-water mark, floored
-        // at the stream's own batchId+1 sequence: refresh-index bumps
-        // the same counter, so a refresh between batches can never
-        // leave a resumed watcher minting a duplicate generation
-        // (ChatPipeline.nextGeneration documents the contract)
-        val gen = graft.chat.ChatPipeline.nextGeneration(indexDir, batchId + 1L,
-          // torn-counter recovery: the max existing chunk-id generation
-          // is the one floor that can never mint a duplicate id
-          () => {
-            val mx = AnnIndex.load(spark, indexDir)
-              .agg(max(col("chunk_id"))).head()
-            (if (mx.isNullAt(0)) 0L else mx.getLong(0) >> 32) + 1L
-          })
-        val rawIds = rowsRdd.zipWithIndex()
-          .map { case ((f, c, lang, e, v), i) =>
-            ((gen << 32) | i, f, c, lang, e, v)
-          }
-          .toDF("chunk_id", "file", "code", "language", "extension", "vector")
-        // append in the LIVE layout: an idbucket-partitioned index gets
-        // bucketed rows (the pushdown's payload-pruning key), a
-        // pre-idbucket index stays uniformly language-only — mixing
-        // layouts would leave the table unreadable
-        val bucketed = AnnIndex.hasIdBucket(spark, indexDir)
-        val ids =
-          if (bucketed)
-            AnnIndex.withIdBucket(rawIds, AnnIndex.ensurePayloadBuckets(indexDir))
-          else rawIds
-        ids.cache()
-        ids.write.mode("append")
-          .partitionBy(
-            (if (bucketed) Seq("language", "idbucket") else Seq("language")): _*)
-          .parquet(s"$indexDir/chunks")
-        // keep approximate search complete: assign the new chunks to
-        // their forest leaves with the PERSISTED planes (pure function
-        // of the plane set, so old and new assignments agree)
-        if (AnnIndex.hasPlanes(indexDir)) {
-          val forest = AnnIndex.loadPlanes(spark, indexDir)
-          val newRows = AnnIndex.buildForestIndex(ids, forest)
-          // append in the EXISTING forest's schema: a pre-metadata
-          // forest must stay uniformly metadata-free, because filter
-          // translation (plans.AnnPushdown) evaluates re-targeted
-          // predicates against forest rows — mixed generations would
-          // read old rows' metadata as null and silently drop every
-          // pre-upgrade chunk from filtered ANN results
-          val existingCols =
-            try spark.read.parquet(s"$indexDir/forest").columns.toSet
-            catch { case _: Exception => newRows.columns.toSet }
-          newRows.select(
-              newRows.columns.filter(existingCols.contains).map(org.apache.spark.sql.functions.col).toSeq: _*)
-            .write.mode("append").partitionBy("tree", "leaf")
-            .parquet(s"$indexDir/forest")
-        }
-        // freshness credit (ChatPipeline.checkIndex): record which
-        // files this batch actually INDEXED, with their content hashes
-        // — check-index then treats matching post-build new files as
-        // fresh instead of false-stale. Only supported-extension files
-        // are logged: an unsupported file (README, config) was seen
-        // but not indexed, and the profile half of the index really is
-        // stale for it.
-        // hash executor-side, collect only (rel, md5) — never the bytes.
-        // MUST live inside the same locked mutation as the chunk
-        // append: with the lock released in between, a refresh reading
-        // the manifest + log would not yet see this batch's files,
-        // classify them as unindexed, and append a SECOND chunk set
-        // for them (and its log deletion could drop these entries)
-        val processed = batch
-          .select(col("path"), md5(col("content")).as("h")).collect()
-          .flatMap { r =>
-            val rel = r.getString(0).stripPrefix("file:")
-              .stripPrefix(watchDir).dropWhile(_ == '/')
-            val ext = rel.split('.').lastOption
-              .filter(_ => rel.contains('.')).map(_.toLowerCase)
-            if (ext.exists(supported.contains)) Some((rel, r.getString(1)))
-            else None
-          }
-        graft.chat.ChatPipeline.appendProcessedLog(indexDir, processed.toSeq)
-        ids
+        // a timeout fails the batch, and with it the stream, loudly.
+        ChatPipeline.withIndexLock(indexDir) {
+          // generation from the index's shared high-water mark, floored
+          // at the stream's own batchId+1 sequence (nextGeneration
+          // documents the contract)
+          val gen = ChatPipeline.nextGeneration(indexDir, batchId + 1L,
+            // torn-counter recovery: the max existing chunk-id generation
+            // is the one floor that can never mint a duplicate id
+            () => {
+              val mx = AnnIndex.load(spark, indexDir)
+                .agg(max(col("chunk_id"))).head()
+              (if (mx.isNullAt(0)) 0L else mx.getLong(0) >> 32) + 1L
+            })
+          val rows = ChatPipeline.embedWave(spark, batch, watchDir, indexDir, gen, embedder)
+          AnnIndex.appendWave(spark, indexDir, rows)
+          org.apache.spark.sql.graft.Bridge.unpersistCheckpoint(rows)
+          // freshness credit (ChatPipeline.checkIndex): record which
+          // files this batch actually INDEXED, with their content hashes
+          // — check-index then treats matching post-build new files as
+          // fresh instead of false-stale. Only supported-extension files
+          // are logged: an unsupported file (README, config) was seen
+          // but not indexed, and the profile half of the index really is
+          // stale for it.
+          // hash executor-side, collect only (rel, md5) — never the bytes.
+          // MUST live inside the same locked mutation as the chunk
+          // append: with the lock released in between, a refresh reading
+          // the manifest + log would not yet see this batch's files,
+          // classify them as unindexed, and append a SECOND chunk set
+          // for them (and its log deletion could drop these entries)
+          val processed = batch
+            .select(col("path"), md5(col("content")).as("h")).collect()
+            .flatMap { r =>
+              val rel = r.getString(0).stripPrefix("file:")
+                .stripPrefix(watchDir).dropWhile(_ == '/')
+              val ext = rel.split('.').lastOption
+                .filter(_ => rel.contains('.')).map(_.toLowerCase)
+              if (ext.exists(supported.contains)) Some((rel, r.getString(1)))
+              else None
+            }
+          ChatPipeline.appendProcessedLog(indexDir, processed.toSeq)
         }.getOrElse(throw new IllegalStateException(
           s"another live session holds the maintenance lock for '$indexDir' — " +
-            "batch append aborted (the stream will retry)"))
+            "batch append aborted"))
         // a registered serving session must see this batch's appended
-        // chunks/forest files — its pinned listings predate them
-        graft.plans.AnnCatalog.refreshIfRegistered(spark, indexDir)
-        AnnIndex.invalidateServing(indexDir)
-        // the freshness TTL must not serve a pre-append verdict (the
-        // processed log this batch just extended is part of the check
-        // key) — same contract as rebuild and refresh
-        graft.chat.ChatPipeline.invalidateFreshness(indexDir)
-        withIds.unpersist()
-        rowsRdd.unpersist()
-        ()
+        // files, and the freshness TTL must not serve a pre-append
+        // verdict (the processed log is part of its check key)
+        ChatPipeline.indexChanged(spark, indexDir)
       }
       .trigger(Trigger.ProcessingTime("1 second"))
       .start()

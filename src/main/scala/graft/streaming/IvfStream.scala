@@ -16,9 +16,10 @@ import graft.ops.Similarity
   * see the appended rows on their next scan with zero re-training and
   * zero rewrite of existing lists.
   *
-  * Same compaction caveat as AnnIndex.compactChunks: plain parquet
-  * directories have no transaction log, so run compaction (or a
-  * centroid re-train, which rewrites vectors/) only with this stream
+  * Unlike AnnIndex.compactChunks, which shares the index maintenance
+  * lock with the chunk watcher, this stream takes no lock: plain
+  * parquet directories have no transaction log, so run compaction (or
+  * a centroid re-train, which rewrites vectors/) only with this stream
   * quiesced. A real deployment puts vectors/ behind a snapshot-
   * isolated table format; the append protocol here is unchanged by
   * that swap.

@@ -4,8 +4,11 @@ import org.apache.spark.sql.functions.col
 import graft.chat.{AnnIndex, ChatPipeline}
 
 /** Scale/crash hardening of the refresh-index path:
-  *  - large changed-sets re-embed through the DISTRIBUTED scan and
-  *    yield an index byte-identical to the driver path on the same edit
+  *  - a refreshed index holds exactly what a fresh build of the edited
+  *    repo holds: the same (file, code, language, extension, vector)
+  *    rows, each with one forest row per tree
+  *  - every chunk of a multi-partition refresh wave, and of a watcher
+  *    batch, is embedded exactly once
   *  - refresh and the incremental stream allocate chunk-id generations
   *    from one persistent high-water counter, so a refresh between
   *    batches can never mint duplicate ids
@@ -42,40 +45,67 @@ class RefreshHardeningSpec extends SparkSpec {
   private def writeBaseRepo(repo: java.nio.file.Path): Unit =
     (1 to 8).foreach(i => w(repo, s"src/mod$i.rs", rust(s"base$i", 6)))
 
-  test("large-wave refresh through the distributed path is byte-identical to the driver path") {
+  test("a refreshed index holds the rows of a fresh build of the edited repo") {
     val repo = scratch("rh-repo")
     writeBaseRepo(repo)
-    val idx0 = scratch("rh-idx0")
-    ChatPipeline.index(spark, repo.toString, idx0.toString)
+    val idx = scratch("rh-idx").toString
+    ChatPipeline.index(spark, repo.toString, idx)
 
     // the edit: modify 4 files, add 4 — an 8-file reindex wave
     (1 to 4).foreach(i => w(repo, s"src/mod$i.rs", rust(s"edit$i", 7)))
     (9 to 12).foreach(i => w(repo, s"src/mod$i.rs", rust(s"new$i", 5)))
+    val st = ChatPipeline.refreshIndex(spark, repo.toString, idx)
+    assert(st.purgedFiles == 4L && st.reindexedFiles == 8L && st.addedChunks > 0L, st)
+    val fresh = scratch("rh-fresh").toString
+    ChatPipeline.index(spark, repo.toString, fresh)
 
-    val idxDriver = scratch("rh-idx-driver")
-    val idxDist = scratch("rh-idx-dist")
-    copyDir(idx0, idxDriver); copyDir(idx0, idxDist)
+    def rows(i: String): Seq[String] =
+      AnnIndex.load(spark, i)
+        .select("file", "code", "language", "extension", "vector")
+        .collect().map(_.toSeq.map {
+          case v: scala.collection.Seq[_] => v.mkString("[", ",", "]")
+          case x => String.valueOf(x)
+        }.mkString("\u0001")).toSeq.sorted
+    assert(rows(idx) == rows(fresh),
+      "refreshed chunks differ from a fresh build of the edited repo")
+    // one forest row per tree for every live chunk, and no orphans
+    val perChunk = spark.read.parquet(s"$idx/forest").groupBy("chunk_id").count()
+    val ids = AnnIndex.load(spark, idx).select("chunk_id")
+    assert(perChunk.join(ids, Seq("chunk_id"), "full_outer")
+      .filter(col("count").isNull || col("count") =!= AnnIndex.NumTrees).isEmpty,
+      "forest rows per chunk differ from NumTrees")
+    assert(ChatPipeline.readIndexMeta(idx).get.contentHash ==
+      ChatPipeline.readIndexMeta(fresh).get.contentHash)
+    assert(!ChatPipeline.checkIndex(idx).toOption.get.stale)
+  }
 
-    val sd = ChatPipeline.refreshIndex(spark, repo.toString, idxDriver.toString,
-      forceDistributed = Some(false))
-    val sx = ChatPipeline.refreshIndex(spark, repo.toString, idxDist.toString,
-      forceDistributed = Some(true))
-    assert(sd == sx, s"stats diverge: $sd vs $sx")
-    assert(sd.reindexedFiles == 8L && sd.addedChunks > 0L, sd)
+  test("each chunk of a multi-partition refresh wave and of a watcher batch is embedded once") {
+    val repo = scratch("rh-once-repo")
+    writeBaseRepo(repo)
+    val idx = scratch("rh-once-idx").toString
+    ChatPipeline.index(spark, repo.toString, idx)
+    // 70 new files: the explicit-path scan spreads them over several
+    // partitions, so a wave that sampled or shuffled its embedded rows
+    // would embed some chunks again
+    (1 to 70).foreach(i => w(repo, s"src/wave$i.rs", rust(s"wave$i", 3)))
+    CountingEmbedder.seen.clear()
+    val st = ChatPipeline.refreshIndex(spark, repo.toString, idx, new CountingEmbedder)
+    import scala.jdk.CollectionConverters._
+    def counts = CountingEmbedder.seen.asScala.toMap
+    assert(st.addedChunks >= 70L && counts.size.toLong == st.addedChunks, (st, counts.size))
+    assert(counts.values.forall(_ == 1),
+      s"refresh re-embedded chunks: ${counts.filter(_._2 != 1).take(3)}")
 
-    def dump(idx: java.nio.file.Path): Seq[Seq[Any]] =
-      AnnIndex.load(spark, idx.toString)
-        .select("chunk_id", "file", "code", "language", "extension", "vector")
-        .collect().map(_.toSeq).toSeq.sortBy(_.head.asInstanceOf[Long])
-    assert(dump(idxDriver) == dump(idxDist),
-      "chunks tables differ between driver-path and distributed-path refresh")
-    def forestDump(idx: java.nio.file.Path): Set[Seq[Any]] =
-      spark.read.parquet(s"$idx/forest").collect().map(_.toSeq).toSet
-    assert(forestDump(idxDriver) == forestDump(idxDist),
-      "forest tables differ between the two refresh paths")
-    assert(ChatPipeline.readIndexMeta(idxDriver.toString).get.contentHash ==
-      ChatPipeline.readIndexMeta(idxDist.toString).get.contentHash)
-    assert(!ChatPipeline.checkIndex(idxDist.toString).toOption.get.stale)
+    val watch = scratch("rh-once-watch")
+    (1 to 6).foreach(i => w(watch, s"src/watched$i.rs", rust(s"watched$i", 3)))
+    CountingEmbedder.seen.clear()
+    val q = graft.streaming.IncrementalIndex.start(spark, watch.toString, idx,
+      new CountingEmbedder)
+    try q.processAllAvailable() finally q.stop()
+    val added = AnnIndex.load(spark, idx).filter(col("file").startsWith("src/watched")).count()
+    assert(added >= 6L && counts.size.toLong == added, (added, counts.size))
+    assert(counts.values.forall(_ == 1),
+      s"the watcher re-embedded chunks: ${counts.filter(_._2 != 1).take(3)}")
   }
 
   test("refresh and a fresh-checkpoint watcher share the generation counter: no duplicate chunk ids") {
@@ -282,8 +312,7 @@ class RefreshHardeningSpec extends SparkSpec {
     // refresh would abort with 'Path does not exist' without escaping
     w(repo, "src/[id].rs", rust("globbed", 5))
     w(repo, "src/mod1.rs", rust("globedit", 6))
-    val st = ChatPipeline.refreshIndex(spark, repo.toString, idx,
-      forceDistributed = Some(true))
+    val st = ChatPipeline.refreshIndex(spark, repo.toString, idx)
     assert(st.addedChunks > 0L, st)
     val files = AnnIndex.load(spark, idx)
       .select("file").distinct().collect().map(_.getString(0)).toSet
@@ -367,5 +396,20 @@ class RefreshHardeningSpec extends SparkSpec {
     assert(inWindow.currentContentHash != afterWindow.currentContentHash ||
       inWindow.stale != afterWindow.stale)
     } finally ChatPipeline.checkSketchTtlMs = savedTtl
+  }
+}
+
+/** Counts every text that reaches `embedBatch`, across tasks: local-mode
+  * tasks run in the test JVM, so the shared map sees each call. */
+object CountingEmbedder {
+  val seen = new java.util.concurrent.ConcurrentHashMap[String, Int]()
+}
+
+class CountingEmbedder extends graft.chat.Embedder {
+  private val inner = new graft.chat.HashingEmbedder()
+  def dim: Int = inner.dim
+  def embedBatch(texts: Seq[String]): Seq[Array[Float]] = {
+    texts.foreach(t => CountingEmbedder.seen.merge(t, 1, _ + _))
+    inner.embedBatch(texts)
   }
 }
