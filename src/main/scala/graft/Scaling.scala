@@ -40,10 +40,8 @@ object Scaling {
     * r14 item 2): scaling runs don't need DuckDB parity, and the
     * 32-bit width's birthday collisions at upper decades (~0.3%
     * output-row inflation at 440M distinct shingles) made output-row
-    * accounting diverge from replica construction. Overridable for
-    * A/B against the old records. */
-  val ScalingBits: Int = sys.env.get("SPARK_GRAFT_SCALING_BITS")
-    .map(_.toInt).getOrElse(graft.ops.Dedup.DefaultHashBits)
+    * accounting diverge from replica construction. */
+  val ScalingBits: Int = graft.ops.Dedup.DefaultHashBits
 
   private val queries: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
     "q14_minhash_lsh" -> ((s, d) => graft.ops.Dedup.minhashLshPairs(s, d, ScalingBits)),

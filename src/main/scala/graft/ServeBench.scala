@@ -123,7 +123,7 @@ object ServeBench {
     val step = math.max(1, docs.length / nQueries)
     val queries = docs.indices.by(step).take(nQueries).map { i =>
       "what is " +
-        docs(i)._2.trim.split("\\s+").filter(_.nonEmpty).take(6).mkString(" ")
+        graft.functions.TextKernel.words(docs(i)._2).take(6).mkString(" ")
     }
 
     // settle: wait for the counter to reach `min`, then for it to stay

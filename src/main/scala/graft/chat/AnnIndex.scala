@@ -57,30 +57,32 @@ object AnnIndex {
     math.min(PayloadBucketsMax, math.max(PayloadBucketsMin, p))
   }
 
+  /** Record B through a temp file and an atomic rename, so a crash
+    * mid-write never leaves an empty or partial `payload_buckets`. */
   private def writePayloadBuckets(path: String, b: Int): Unit = {
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(path))
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(path, "payload_buckets"), b.toString)
+    val dir = java.nio.file.Paths.get(path)
+    java.nio.file.Files.createDirectories(dir)
+    val tmp = java.nio.file.Files.createTempFile(dir, ".payload_buckets", ".tmp")
+    java.nio.file.Files.writeString(tmp, b.toString)
+    java.nio.file.Files.move(tmp, dir.resolve("payload_buckets"),
+      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
   }
 
-  /** The recorded bucket count of an existing index (appenders MUST
-    * use this, never re-derive from a live count). Falls back to the
-    * one historical constant for an idbucket layout predating the
-    * recorded file. */
-  def readPayloadBuckets(path: String): Int =
-    try java.nio.file.Files.readString(
-      java.nio.file.Paths.get(path, "payload_buckets")).trim.toInt
-    catch { case _: Exception => PayloadBucketsLegacyDefault }
-
-  /** [[readPayloadBuckets]], RECORDING the legacy default first when
-    * the file is missing (a bucketed table created by the stream never
-    * went through save()): later appenders must read the same constant
-    * from the artifact, not inherit it from code-version coincidence. */
+  /** The recorded bucket count of an existing index (appenders MUST use
+    * this, never re-derive from a live count). A missing file is first
+    * RECORDED as the legacy default (a bucketed table created by the
+    * stream never went through save()), so later appenders read the same
+    * constant from the artifact, not from code-version coincidence. An
+    * unreadable or malformed file throws, naming the path and its
+    * content: bucketing an append with any other B than the build's
+    * would scatter ids across the wrong buckets. */
   def ensurePayloadBuckets(path: String): Int = {
     val p = java.nio.file.Paths.get(path, "payload_buckets")
     if (!java.nio.file.Files.exists(p))
       writePayloadBuckets(path, PayloadBucketsLegacyDefault)
-    readPayloadBuckets(path)
+    val raw = java.nio.file.Files.readString(p)
+    raw.trim.toIntOption.filter(_ > 0).getOrElse(throw new IllegalStateException(
+      s"malformed payload_buckets at $p: '$raw' (expected a positive bucket count)"))
   }
 
   /** Add the idbucket column iff absent (idempotent). */

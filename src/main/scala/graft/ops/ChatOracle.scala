@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.chat.Retrieval
 import graft.core.Tables
+import graft.functions.TextKernel
 import graft.ops.Materialize
 
 /** DuckDB-oracle-checkable projections of the chat-engine operators
@@ -249,11 +250,9 @@ object ChatOracle {
         val md = java.security.MessageDigest.getInstance("MD5")
         it.flatMap { case (id, txt) =>
           val counts = new Array[Long](256)
-          txt.trim.split("\\s+").foreach { t =>
-            if (t.nonEmpty) {
-              val d = md.digest(t.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-              counts(d(0) & 0xff) += 1L
-            }
+          TextKernel.words(txt).foreach { t =>
+            val d = md.digest(t.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+            counts(d(0) & 0xff) += 1L
           }
           var nrm = 0L; var b = 0
           while (b < 256) { nrm += counts(b) * counts(b); b += 1 }
@@ -301,11 +300,9 @@ object ChatOracle {
         val md = java.security.MessageDigest.getInstance("MD5")
         it.flatMap { case (src, txt) =>
           val counts = new Array[Long](256)
-          txt.trim.split("\\s+").foreach { t =>
-            if (t.nonEmpty) {
-              val d = md.digest(t.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-              counts(d(0) & 0xff) += 1L
-            }
+          TextKernel.words(txt).foreach { t =>
+            val d = md.digest(t.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+            counts(d(0) & 0xff) += 1L
           }
           (0 until 256).iterator.collect {
             case b if counts(b) > 0L => (src, b.toLong, counts(b))
@@ -378,12 +375,10 @@ object ChatOracle {
         it.flatMap { case (id, txt) =>
           val counts = new Array[Long](256)
           var n = 0L
-          txt.trim.split("\\s+").foreach { t =>
-            if (t.nonEmpty) {
-              val d = md.digest(t.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-              counts(d(0) & 0xff) += 1L
-              n += 1L
-            }
+          TextKernel.words(txt).foreach { t =>
+            val d = md.digest(t.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+            counts(d(0) & 0xff) += 1L
+            n += 1L
           }
           (0 until 256).iterator.collect {
             case b if counts(b) > 0L => (id, b.toLong, counts(b), n)

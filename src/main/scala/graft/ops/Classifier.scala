@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.Tables
+import graft.functions.TextKernel
 
 /** Model-based quality classification over `documents` — the
   * fasttext-style curation step (train a cheap linear classifier on
@@ -45,13 +46,8 @@ object Classifier {
         val md = java.security.MessageDigest.getInstance("MD5")
         it.flatMap { case (id, y, txt) =>
           val counts = new Array[Long](nb)
-          txt.trim.split("\\s+").foreach { t =>
-            if (t.nonEmpty) {
-              val hv = Dedup.packHash(
-                md.digest(t.getBytes(java.nio.charset.StandardCharsets.UTF_8)), 32)
-              counts((hv % nb).toInt) += 1L
-            }
-          }
+          TextKernel.gramHashes(TextKernel.words(txt), 1, 32, md)
+            .foreach(hv => counts((hv % nb).toInt) += 1L)
           (0 until nb).iterator.collect {
             case b if counts(b) > 0L => (id, y, b.toLong, counts(b))
           }

@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.{Consts, Tables}
-import graft.functions.PairCounts
+import graft.functions.{PairCounts, TextKernel}
 import graft.ops.TextAnalytics.{tokens, shingles3, sqlShingles}
 
 /** Set-overlap families over the shared shingle tables: n-gram
@@ -412,36 +412,21 @@ trait DedupOverlap { this: Dedup.type =>
         val md = java.security.MessageDigest.getInstance("MD5")
         val bench = bc.value
         it.map { case (id, txt) =>
-          val t = txt.trim.split("\\s+").filter(_.nonEmpty)
+          val t = TextKernel.words(txt)
+          val h = TextKernel.gramHashes(t, 3, bits, md)
           val covered = new Array[Boolean](t.length)
           var i = 0
-          while (i <= t.length - 3) {
-            val s = s"${t(i)} ${t(i + 1)} ${t(i + 2)}"
-            val hv = packHash(md.digest(s.getBytes(java.nio.charset.StandardCharsets.UTF_8)), bits)
-            if (bench.contains(hv)) {
+          while (i < h.length) {
+            if (bench.contains(h(i))) {
               covered(i) = true; covered(i + 1) = true; covered(i + 2) = true
             }
             i += 1
           }
-          val kept = new StringBuilder
-          var nRem = 0L
-          var j = 0
-          while (j < t.length) {
-            if (covered(j)) nRem += 1L
-            else {
-              if (kept.nonEmpty) kept.append(' ')
-              kept.append(t(j))
-            }
-            j += 1
-          }
-          (id, t.length.toLong, nRem, kept.toString)
+          val (nRem, rt) = TextKernel.redact(t, covered)
+          (id, t.length.toLong, nRem, rt)
         }
       }
-      .toDF("doc_id", "n_tokens", "n_removed", "rt")
-      .select(col("doc_id"), col("n_tokens"), col("n_removed"),
-        (col("n_removed") === 0L).as("clean"),
-        md5(col("rt").cast("binary")).as("redacted_hash"))
-      .orderBy("doc_id")
+      .transform(TextAnalytics.redactReport)
   }
 
   def decontamRedactSql: String =
@@ -595,11 +580,7 @@ trait DedupOverlap { this: Dedup.type =>
         .mapPartitions { it =>
           val md = java.security.MessageDigest.getInstance("MD5")
           it.flatMap { case (id, txt) =>
-            val t = txt.trim.split("\\s+").filter(_.nonEmpty)
-            (0 to t.length - n).map { i =>
-              val g = t.slice(i, i + n).mkString(" ")
-              (id, packHash(md.digest(g.getBytes(java.nio.charset.StandardCharsets.UTF_8)), bits))
-            }
+            TextKernel.gramHashes(TextKernel.words(txt), n, bits, md).map(gh => (id, gh))
           }
         }
         .toDF("doc_id", "gh"))
@@ -642,13 +623,7 @@ trait DedupOverlap { this: Dedup.type =>
       .as[(Long, String)]
       .mapPartitions { it =>
         val md = java.security.MessageDigest.getInstance("MD5")
-        it.flatMap { case (_, txt) =>
-          val t = txt.trim.split("\\s+").filter(_.nonEmpty)
-          (0 to t.length - n).map { i =>
-            val g = t.slice(i, i + n).mkString(" ")
-            packHash(md.digest(g.getBytes(java.nio.charset.StandardCharsets.UTF_8)), bits)
-          }
-        }
+        it.flatMap { case (_, txt) => TextKernel.gramHashes(TextKernel.words(txt), n, bits, md) }
       }
       .toDF("gh")
     val freq = grams.groupBy("gh").agg(count(lit(1)).as("f"))
@@ -758,12 +733,8 @@ trait DedupOverlap { this: Dedup.type =>
         .mapPartitions { it =>
           val md = java.security.MessageDigest.getInstance("MD5")
           it.flatMap { case (id, txt) =>
-            val t = txt.trim.split("\\s+").filter(_.nonEmpty)
-            (0 to t.length - n).map { i =>
-              (id, i.toLong,
-                packHash(md.digest(t.slice(i, i + n).mkString(" ")
-                  .getBytes(java.nio.charset.StandardCharsets.UTF_8)), bits))
-            }
+            TextKernel.gramHashes(TextKernel.words(txt), n, bits, md).zipWithIndex
+              .map { case (gh, i) => (id, i.toLong, gh) }
           }
         }
         .toDF("doc_id", "i", "gh")
@@ -786,32 +757,18 @@ trait DedupOverlap { this: Dedup.type =>
       .as[(Long, String, Option[Seq[Long]])]
       .mapPartitions { it =>
         it.map { case (id, txt, starts) =>
-          val t = txt.trim.split("\\s+").filter(_.nonEmpty)
+          val t = TextKernel.words(txt)
           val covered = new Array[Boolean](t.length)
           starts.getOrElse(Nil).foreach { s =>
             var j = s.toInt
             val end = math.min(s.toInt + n, t.length)
             while (j < end) { covered(j) = true; j += 1 }
           }
-          val kept = new StringBuilder
-          var nRem = 0L
-          var j = 0
-          while (j < t.length) {
-            if (covered(j)) nRem += 1L
-            else {
-              if (kept.nonEmpty) kept.append(' ')
-              kept.append(t(j))
-            }
-            j += 1
-          }
-          (id, t.length.toLong, nRem, kept.toString)
+          val (nRem, rt) = TextKernel.redact(t, covered)
+          (id, t.length.toLong, nRem, rt)
         }
       }
-      .toDF("doc_id", "n_tokens", "n_removed", "rt")
-      .select(col("doc_id"), col("n_tokens"), col("n_removed"),
-        (col("n_removed") === 0L).as("clean"),
-        md5(col("rt").cast("binary")).as("redacted_hash"))
-      .orderBy("doc_id")
+      .transform(TextAnalytics.redactReport)
   }
 
   def dupSpanRedactSql: String = {

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.{Consts, Tables}
+import graft.functions.TextKernel
 import graft.ops.TextAnalytics.{tokens, shingles3, sqlShingles}
 
 /** Signature families: shingle/minhash core, exact and normalized
@@ -40,29 +41,16 @@ trait DedupSignatures { this: Dedup.type =>
     * whenever no 32-bit collision occurs (spec-checked at sf0.001). */
   val OracleHashBits = 32
 
-  /** First `bits` of an md5 digest as a big-endian long. 32-bit values
-    * are non-negative (unsigned int range, identical to the SQL-side
-    * strpos-over-hex computation); 64-bit values use the full signed
-    * range — downstream set/join/count ops are sign-agnostic. */
-  private[ops] def packHash(d: Array[Byte], bits: Int): Long =
-    if (bits == 32)
-      ((d(0) & 0xffL) << 24) | ((d(1) & 0xffL) << 16) |
-        ((d(2) & 0xffL) << 8) | (d(3) & 0xffL)
-    else
-      ((d(0) & 0xffL) << 56) | ((d(1) & 0xffL) << 48) |
-        ((d(2) & 0xffL) << 40) | ((d(3) & 0xffL) << 32) |
-        ((d(4) & 0xffL) << 24) | ((d(5) & 0xffL) << 16) |
-        ((d(6) & 0xffL) << 8) | (d(7) & 0xffL)
-
   /** (doc_id, source, shingle) rows — distinct 3-gram shingles per doc.
     *
     * Computed in a typed flatMap, NOT with higher-order-function
     * expressions: HOF lambdas are interpreted (no codegen) and Catalyst
     * re-inlines the tokenize subexpression into every element_at
     * reference, which measured ~25s at sf0.1 for what plain JVM string
-    * code does in well under a second. Semantics are identical to
-    * split-trim-filter + 3-gram + distinct (same Java regex on both
-    * paths), so the DuckDB oracle is unaffected. */
+    * code does in well under a second. The flatMap tokenizes with
+    * `TextKernel.words`, the Scala image of the oracle's
+    * split-on-\s+-and-drop-empties (`sqlTokens`), so the DuckDB oracle
+    * is unaffected. */
   private[ops] def shingleRows(spark: SparkSession, sfDir: String,
                                bits: Int = DefaultHashBits): DataFrame =
     shingleRowsOf(Tables.documents(spark, sfDir), bits)
@@ -79,22 +67,13 @@ trait DedupSignatures { this: Dedup.type =>
       .as[(Long, String, String)]
       .mapPartitions { it =>
         val md = java.security.MessageDigest.getInstance("MD5")
+        // hv = leading md5 bytes at the configured width (32-bit mode is
+        // the SQL-side shingleHashExpr); distinct by HASH, not just by
+        // shingle string: the oracle's set ops run over list_distinct of
+        // the hashed values, so two distinct shingles colliding to one hv
+        // must count once on both sides
         it.flatMap { case (id, src, txt) =>
-          val t = txt.trim.split("\\s+").filter(_.nonEmpty)
-          val sh =
-            if (t.length < 3) Seq.empty[String]
-            else (0 to t.length - 3).map(i => s"${t(i)} ${t(i + 1)} ${t(i + 2)}").distinct
-          sh.map { s =>
-            // hv = leading md5 bytes at the configured width; 32-bit
-            // mode is identical to the SQL-side strpos-over-hex
-            // computation (shingleHashExpr)
-            packHash(md.digest(s.getBytes(java.nio.charset.StandardCharsets.UTF_8)), bits)
-          }
-          // distinct by HASH, not just by shingle string: the oracle's
-          // set ops run over list_distinct of the hashed values, so two
-          // distinct shingles colliding to one hv must count once on
-          // both sides (set semantics over hv everywhere)
-          .distinct.map(hv => (id, src, hv))
+          TextKernel.gramHashes(TextKernel.words(txt), 3, bits, md).distinct.map(hv => (id, src, hv))
         }
       }
       .toDF("doc_id", "source", "hv")
@@ -136,7 +115,7 @@ trait DedupSignatures { this: Dedup.type =>
     * hex nibbles of md5. Mirrored 1:1 in the DuckDB oracle (instr vs
     * strpos — same 1-based semantics). */
   /** DuckDB-dialect form of the 32-bit hash for sibling ops suites'
-    * oracle SQL (identical arithmetic to the Spark-side packHash). */
+    * oracle SQL (identical arithmetic to `TextKernel.packHash`). */
   private[ops] def shingleHashExprSql(hExpr: String): String =
     shingleHashExpr("strpos", hExpr)
 
@@ -202,36 +181,18 @@ trait DedupSignatures { this: Dedup.type =>
                                          bits: Int = DefaultHashBits): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    val params = Consts.MinhashParams.toArray
-    val prime = Consts.MinhashPrime
-    val nBands = Consts.LshBands; val rowsPer = Consts.LshRowsPerBand
     docs
       .select(col("doc_id"), col("source"), col("text"))
       .as[(Long, String, String)]
       .mapPartitions { it =>
         val md = java.security.MessageDigest.getInstance("MD5")
         it.flatMap { case (id, src, txt) =>
-          val t = txt.trim.split("\\s+").filter(_.nonEmpty)
-          if (t.length < 3) Iterator.empty
+          val hvs = TextKernel.gramHashes(TextKernel.words(txt), 3, bits, md).distinct
+          if (hvs.isEmpty) Iterator.empty
           else {
-            val hvs = (0 to t.length - 3).map { i =>
-              packHash(md.digest(s"${t(i)} ${t(i + 1)} ${t(i + 2)}"
-                .getBytes(java.nio.charset.StandardCharsets.UTF_8)), bits)
-            }.distinct.toArray
-            val mh = Array.fill(params.length)(Long.MaxValue)
-            hvs.foreach { hv =>
-              val h32 = (hv >>> 32) ^ (hv & 0xffffffffL)
-              var i = 0
-              while (i < params.length) {
-                val v = (h32 * params(i)._1 + params(i)._2) % prime
-                if (v < mh(i)) mh(i) = v
-                i += 1
-              }
-            }
-            val bands = Array.tabulate(nBands)(b =>
-              (0 until rowsPer).map(r => mh(b * rowsPer + r)).mkString("|"))
+            val mh = TextKernel.minhash(hvs)
             java.util.Arrays.sort(hvs)
-            Iterator.single(DocShingles(id, src, hvs, bands))
+            Iterator.single(DocShingles(id, src, hvs, TextKernel.bands(mh)))
           }
         }
       }
@@ -483,24 +444,7 @@ trait DedupSignatures { this: Dedup.type =>
       .as[(Long, String)]
       .mapPartitions { it =>
         val md = java.security.MessageDigest.getInstance("MD5")
-        it.map { case (id, txt) =>
-          val votes = new Array[Long](Consts.SimHashBits)
-          txt.trim.split("\\s+").foreach { t =>
-            if (t.nonEmpty) {
-              val d = md.digest(t.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-              var k = 0
-              while (k < Consts.SimHashBits) {
-                val nib = if (k % 2 == 0) (d(k / 2) >> 4) & 0xf else d(k / 2) & 0xf
-                votes(k) += (if (nib >= 8) 1L else -1L)
-                k += 1
-              }
-            }
-          }
-          var hash = 0L
-          var k = 0
-          while (k < Consts.SimHashBits) { if (votes(k) > 0L) hash |= (1L << k); k += 1 }
-          (id, hash)
-        }
+        it.map { case (id, txt) => (id, TextKernel.simhash16(txt, md)) }
       }
       .toDF("doc_id", "simhash")
   }

@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.{Consts, Tables}
-import graft.functions.PairCounts
+import graft.functions.{PairCounts, TextKernel}
 import graft.ops.TextAnalytics.{tokens, shingles3, sqlShingles}
 
 /** Winnowing fingerprints (Schleimer/Wilkerson/Aiken 2003): pair
@@ -74,17 +74,10 @@ trait DedupWinnow { this: Dedup.type =>
       .mapPartitions { it =>
         val md = java.security.MessageDigest.getInstance("MD5")
         it.flatMap { case (id, txt) =>
-          val t = txt.trim.split("\\s+").filter(_.nonEmpty)
-          val m = t.length - n + 1
-          if (m <= 0) Iterator.empty
+          val h = TextKernel.gramHashes(TextKernel.words(txt), n, bits, md)
+          val m = h.length
+          if (m == 0) Iterator.empty
           else {
-            val h = new Array[Long](m)
-            var i = 0
-            while (i < m) {
-              val g = t.slice(i, i + n).mkString(" ")
-              h(i) = packHash(md.digest(g.getBytes(java.nio.charset.StandardCharsets.UTF_8)), bits)
-              i += 1
-            }
             val out = scala.collection.mutable.LinkedHashSet.empty[Long]
             var s = 0
             val lastStart = math.max(0, m - w)
@@ -239,12 +232,8 @@ trait DedupWinnow { this: Dedup.type =>
       .mapPartitions { it =>
         val md = java.security.MessageDigest.getInstance("MD5")
         it.flatMap { case (id, txt) =>
-          val t = txt.trim.split("\\s+").filter(_.nonEmpty)
-          (0 to t.length - n).map { i =>
-            val g = t.slice(i, i + n).mkString(" ")
-            (id, i.toLong,
-              packHash(md.digest(g.getBytes(java.nio.charset.StandardCharsets.UTF_8)), bits))
-          }
+          TextKernel.gramHashes(TextKernel.words(txt), n, bits, md).zipWithIndex
+            .map { case (gh, i) => (id, i.toLong, gh) }
         }
       }
       .toDF("doc_id", "pos", "gh")
@@ -492,16 +481,12 @@ trait DedupWinnow { this: Dedup.type =>
         .mapPartitions { it =>
           val md = java.security.MessageDigest.getInstance("MD5")
           it.flatMap { case (id, txt) =>
-            val t = txt.trim.split("\\s+").filter(_.nonEmpty)
+            val h = TextKernel.gramHashes(TextKernel.words(txt), n2, bits, md)
             val m = new java.util.HashMap[Long, Array[Long]]()
             var i = 0
-            val last = t.length - n2
-            while (i <= last) {
-              val g = t.slice(i, i + n2).mkString(" ")
-              val gh = packHash(
-                md.digest(g.getBytes(java.nio.charset.StandardCharsets.UTF_8)), bits)
-              val e = m.get(gh)
-              if (e == null) m.put(gh, Array(1L, i.toLong))
+            while (i < h.length) {
+              val e = m.get(h(i))
+              if (e == null) m.put(h(i), Array(1L, i.toLong))
               else e(0) += 1L
               i += 1
             }
@@ -527,11 +512,10 @@ trait DedupWinnow { this: Dedup.type =>
     val winners = stats.crossJoin(broadcast(thr)).filter(col("df") >= col("thr"))
       .select(col("gh"), col("df"), col("cf"),
         col("loc.doc_id").as("doc_id"), col("loc.pos").as("rep_pos"))
-    // tokenization must MATCH gramPosRows' Scala-side
-    // trim.split("\\s+").filter(_.nonEmpty): SQL trim strips only
-    // spaces (not \t/\n), so filter the empty tokens out instead —
-    // split + drop-empties is exactly the Scala pipeline's token array
-    // for any whitespace shape. HOF filter is interpreted, but this
+    // tokenization must MATCH the Scala side's `TextKernel.words`
+    // (rep_pos indexes its word array): split on \s+ with NO trim, then
+    // drop the empty tokens — the same array for any text, control
+    // chars at either end included. HOF filter is interpreted, but this
     // projection runs over ~k winner docs only.
     val gramStrings = Tables.documents(spark, sfDir)
       .select(col("doc_id"), col("text"))

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.core.Tables
+import graft.functions.TextKernel
 
 /** Hybrid retrieval: Reciprocal Rank Fusion (RRF, Cormack/Clarke/
   * Büttcher 2009) of a lexical BM25 ranking and a hash-embedding
@@ -334,9 +335,8 @@ object Hybrid {
     val qTexts = docs.filter(col("doc_id").isin(qidSeq: _*))
       .select("doc_id", "text").collect()
       .map(r => (r.getLong(0), r.getString(1))).sortBy(_._1)
-    def tokenize(t: String): Array[String] = t.trim.split("\\s+").filter(_.nonEmpty)
     val qTermSets: Array[(Long, Array[String])] =
-      qTexts.map { case (id, t) => (id, tokenize(t).distinct) }
+      qTexts.map { case (id, t) => (id, TextKernel.words(t).distinct) }
     val allQTerms = qTermSets.flatMap(_._2).distinct.toSet
     // df over the query-term vocabulary only (bounded by the eval
     // set's total text, not the corpus vocabulary)
@@ -350,7 +350,7 @@ object Hybrid {
     val md0 = java.security.MessageDigest.getInstance("MD5")
     def hist(t: String): Array[Long] = {
       val c = new Array[Long](256)
-      tokenize(t.toLowerCase).foreach { w =>
+      TextKernel.words(t.toLowerCase).foreach { w =>
         c(md0.digest(w.getBytes(java.nio.charset.StandardCharsets.UTF_8))(0) & 0xff) += 1L
       }
       c
@@ -369,7 +369,7 @@ object Hybrid {
         val md = java.security.MessageDigest.getInstance("MD5")
         val nd = ndL; val sdl = sdlL
         it.flatMap { case (did, text) =>
-          val tokArr = text.trim.split("\\s+").filter(_.nonEmpty)
+          val tokArr = TextKernel.words(text)
           val tfMap = scala.collection.mutable.HashMap.empty[String, Long]
           tokArr.foreach(w => tfMap.update(w, tfMap.getOrElse(w, 0L) + 1L))
           val dl = tokArr.length.toLong

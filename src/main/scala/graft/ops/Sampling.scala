@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.Tables
+import graft.functions.TextKernel
 
 /** Deterministic sampling / splitting operators for training-data
   * pipelines. Both are driven by a content-independent HASH of the
@@ -132,14 +133,8 @@ object Sampling {
         .mapPartitions { it =>
           val md = java.security.MessageDigest.getInstance("MD5")
           it.flatMap { case (id, lang, txt) =>
-            val t = txt.trim.split("\\s+").filter(_.nonEmpty)
-            (0 to t.length - 2).map { i =>
-              val d = md.digest(s"${t(i)} ${t(i + 1)}"
-                .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-              val hv = ((d(0) & 0xffL) << 24) | ((d(1) & 0xffL) << 16) |
-                ((d(2) & 0xffL) << 8) | (d(3) & 0xffL)
-              (id, lang, hv % DsirBuckets)
-            }
+            TextKernel.gramHashes(TextKernel.words(txt), 2, 32, md)
+              .map(hv => (id, lang, hv % DsirBuckets))
           }
         }
         .toDF("doc_id", "lang", "fh"))
@@ -573,9 +568,7 @@ object Sampling {
       .mapPartitions { it =>
         it.flatMap { txt =>
           val m = scala.collection.mutable.LinkedHashMap.empty[String, Long]
-          txt.trim.split("\\s+").foreach { t =>
-            if (t.nonEmpty) m.update(t, m.getOrElse(t, 0L) + 1L)
-          }
+          TextKernel.words(txt).foreach(t => m.update(t, m.getOrElse(t, 0L) + 1L))
           m.iterator
         }
       }

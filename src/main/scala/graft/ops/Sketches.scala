@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.Tables
+import graft.functions.TextKernel
 
 /** Sketch-based operators: HyperLogLog approximate distinct counts and
   * Bloom-filter join pruning. The reference has no approximate
@@ -228,18 +229,16 @@ object Sketches {
       .mapPartitions { it =>
         val counts = scala.collection.mutable.HashMap.empty[String, Long]
         it.foreach { txt =>
-          txt.trim.split("\\s+").foreach { t =>
-            if (t.nonEmpty) {
-              if (counts.contains(t) || counts.size < m) counts(t) = counts.getOrElse(t, 0L) + 1L
-              else {
-                // decrement-all on a full miss; drop zeros
-                val dead = scala.collection.mutable.ArrayBuffer.empty[String]
-                counts.keysIterator.foreach { k =>
-                  val v = counts(k) - 1L
-                  if (v == 0L) dead += k else counts(k) = v
-                }
-                dead.foreach(counts.remove)
+          TextKernel.words(txt).foreach { t =>
+            if (counts.contains(t) || counts.size < m) counts(t) = counts.getOrElse(t, 0L) + 1L
+            else {
+              // decrement-all on a full miss; drop zeros
+              val dead = scala.collection.mutable.ArrayBuffer.empty[String]
+              counts.keysIterator.foreach { k =>
+                val v = counts(k) - 1L
+                if (v == 0L) dead += k else counts(k) = v
               }
+              dead.foreach(counts.remove)
             }
           }
         }
@@ -300,7 +299,7 @@ object Sketches {
     * cells and the estimates hash-match exactly — a stronger gate than
     * a bound-only check. */
   private def cmsCol(r: Int, tok: String, md: java.security.MessageDigest): Int = {
-    val h = Dedup.packHash(md.digest(s"$r:$tok".getBytes(java.nio.charset.StandardCharsets.UTF_8)), 32)
+    val h = TextKernel.packHash(md.digest(s"$r:$tok".getBytes(java.nio.charset.StandardCharsets.UTF_8)), 32)
     (h % CmsWidth).toInt
   }
 
@@ -317,13 +316,11 @@ object Sketches {
         val md = java.security.MessageDigest.getInstance("MD5")
         val cells = Array.ofDim[Long](CmsDepth * CmsWidth)
         it.foreach { txt =>
-          txt.trim.split("\\s+").foreach { t =>
-            if (t.nonEmpty) {
-              var r = 0
-              while (r < CmsDepth) {
-                cells(r * CmsWidth + cmsCol(r, t, md)) += 1L
-                r += 1
-              }
+          TextKernel.words(txt).foreach { t =>
+            var r = 0
+            while (r < CmsDepth) {
+              cells(r * CmsWidth + cmsCol(r, t, md)) += 1L
+              r += 1
             }
           }
         }

@@ -1,8 +1,9 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.{Consts, Tables}
+import graft.functions.TextKernel
 
 /** Text-analysis operators over the `documents` table: tokenization
   * stats, quality scoring, language-ID, and content fingerprinting.
@@ -15,7 +16,9 @@ import graft.core.{Consts, Tables}
   */
 object TextAnalytics {
 
-  /** Whitespace tokens of trimmed text, empty strings dropped. */
+  /** Whitespace tokens of text, empty strings dropped: Spark's `trim`
+    * strips spaces only, and the split absorbs every other whitespace
+    * char, so this is `TextKernel.words` (no `String.trim`) as a Column. */
   def tokens(text: Column): Column =
     filter(split(trim(text), "\\s+"), t => t =!= lit(""))
 
@@ -355,7 +358,7 @@ object TextAnalytics {
       .as[(Long, String)]
       .mapPartitions { it =>
         it.map { case (id, txt) =>
-          val t = txt.trim.split("\\s+").filter(_.nonEmpty)
+          val t = TextKernel.words(txt)
           val covered = new Array[Boolean](t.length)
           val seen = new scala.collection.mutable.HashSet[String]
           var i = 0
@@ -367,26 +370,22 @@ object TextAnalytics {
             }
             i += 1
           }
-          val kept = new StringBuilder
-          var nRem = 0L
-          var j = 0
-          while (j < t.length) {
-            if (covered(j)) nRem += 1L
-            else {
-              if (kept.nonEmpty) kept.append(' ')
-              kept.append(t(j))
-            }
-            j += 1
-          }
-          (id, t.length.toLong, nRem, kept.toString)
+          val (nRem, rt) = TextKernel.redact(t, covered)
+          (id, t.length.toLong, nRem, rt)
         }
       }
-      .toDF("doc_id", "n_tokens", "n_removed", "rt")
+      .transform(redactReport)
+  }
+
+  /** The span-surgery report shared by q109, q115 and q120 over
+    * (doc_id, n_tokens, n_removed, rebuilt text) rows: the rebuilt text
+    * leaves only as its md5, so removal extents are hash-pinned. */
+  private[ops] def redactReport(rows: Dataset[(Long, Long, Long, String)]): DataFrame =
+    rows.toDF("doc_id", "n_tokens", "n_removed", "rt")
       .select(col("doc_id"), col("n_tokens"), col("n_removed"),
         (col("n_removed") === 0L).as("clean"),
         md5(col("rt").cast("binary")).as("redacted_hash"))
       .orderBy("doc_id")
-  }
 
   def withinDocRedactSql: String = {
     val n = WithinSpanN
@@ -1041,9 +1040,7 @@ object TextAnalytics {
       .mapPartitions { it =>
         it.flatMap { case (id, txt) =>
           val m = scala.collection.mutable.LinkedHashMap.empty[String, Long]
-          txt.trim.split("\\s+").foreach { t =>
-            if (t.nonEmpty) m.update(t, m.getOrElse(t, 0L) + 1L)
-          }
+          TextKernel.words(txt).foreach(t => m.update(t, m.getOrElse(t, 0L) + 1L))
           m.iterator.map { case (t, c) => (id, t, c) }
         }
       }
@@ -1928,9 +1925,7 @@ object TextAnalytics {
       .mapPartitions { it =>
         it.flatMap { case (src, txt) =>
           val m = scala.collection.mutable.LinkedHashMap.empty[String, Long]
-          txt.trim.split("\\s+").foreach { t =>
-            if (t.nonEmpty) m.update(t, m.getOrElse(t, 0L) + 1L)
-          }
+          TextKernel.words(txt).foreach(t => m.update(t, m.getOrElse(t, 0L) + 1L))
           m.iterator.map { case (t, c) => (src, t, c) }
         }
       }
@@ -1989,9 +1984,7 @@ object TextAnalytics {
       .mapPartitions { it =>
         it.flatMap { case (src, txt) =>
           val m = scala.collection.mutable.LinkedHashMap.empty[String, Long]
-          txt.trim.split("\\s+").foreach { t =>
-            if (t.nonEmpty) m.update(t, m.getOrElse(t, 0L) + 1L)
-          }
+          TextKernel.words(txt).foreach(t => m.update(t, m.getOrElse(t, 0L) + 1L))
           m.iterator.map { case (t, c) => (src, t, c) }
         }
       }
@@ -2051,7 +2044,7 @@ object TextAnalytics {
       .as[(String, String)]
       .mapPartitions { it =>
         it.flatMap { case (src, txt) =>
-          val t = txt.trim.split("\\s+").filter(_.nonEmpty)
+          val t = TextKernel.words(txt)
           val m = scala.collection.mutable.LinkedHashMap.empty[(String, String), Long]
           var i = 0
           while (i < t.length - 1) {
@@ -2073,7 +2066,7 @@ object TextAnalytics {
       .as[(Long, String)]
       .mapPartitions { it =>
         it.flatMap { case (id, txt) =>
-          val t = txt.trim.split("\\s+").filter(_.nonEmpty)
+          val t = TextKernel.words(txt)
           val m = scala.collection.mutable.LinkedHashMap.empty[(String, String), Long]
           var i = 0
           while (i < t.length - 1) {
@@ -2304,7 +2297,7 @@ object TextAnalytics {
     * driver-side, executed per row inside the mapPartitions below). */
   private[graft] def corruptDoc(id: Long, text: String,
       md: java.security.MessageDigest): (Long, Long, Long, Long, String, String) = {
-    val t = text.trim.split("\\s+").filter(_.nonEmpty)
+    val t = TextKernel.words(text)
     val masked = t.indices.map { i =>
       (md.digest(s"$id-$i".getBytes("UTF-8"))(0) & 0xff) < SpanMaskBound
     }
@@ -2412,9 +2405,7 @@ object TextAnalytics {
       .mapPartitions { it =>
         it.flatMap { case (src, txt) =>
           val m = scala.collection.mutable.LinkedHashMap.empty[String, Long]
-          txt.trim.split("\\s+").foreach { t =>
-            if (t.nonEmpty) m.update(t, m.getOrElse(t, 0L) + 1L)
-          }
+          TextKernel.words(txt).foreach(t => m.update(t, m.getOrElse(t, 0L) + 1L))
           m.iterator.map { case (t, c) => (src, t, c) }
         }
       }
@@ -2521,17 +2512,11 @@ object TextAnalytics {
       .mapPartitions { it =>
         val md = java.security.MessageDigest.getInstance("MD5")
         it.flatMap { case (src, txt) =>
-          val t = txt.trim.split("\\s+").filter(_.nonEmpty)
+          val t = TextKernel.words(txt)
           val m = scala.collection.mutable.LinkedHashMap.empty[(Int, Long), Long]
           orders.foreach { n =>
-            var i = 0
-            while (i <= t.length - n) {
-              val g = t.slice(i, i + n).mkString(" ")
-              val gh = Dedup.packHash(
-                md.digest(g.getBytes(java.nio.charset.StandardCharsets.UTF_8)), bits)
-              m.update((n, gh), m.getOrElse((n, gh), 0L) + 1L)
-              i += 1
-            }
+            TextKernel.gramHashes(t, n, bits, md).foreach(gh =>
+              m.update((n, gh), m.getOrElse((n, gh), 0L) + 1L))
           }
           m.iterator.map { case ((n, gh), c) => (src, n.toLong, gh, c) }
         }
@@ -2749,7 +2734,7 @@ object TextAnalytics {
       .as[(String, String, Boolean)]
       .mapPartitions { it =>
         it.flatMap { case (src, txt, half) =>
-          val t = txt.trim.split("\\s+").filter(_.nonEmpty)
+          val t = TextKernel.words(txt)
           val m = scala.collection.mutable.LinkedHashMap.empty[String, Long]
           t.foreach(w => m.update(w, m.getOrElse(w, 0L) + 1L))
           m.iterator.map { case (w, c) => (src, w, if (half) c else 0L, c) }

@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import graft.core.Consts
+import graft.functions.TextKernel
 
 /** Streaming NEAR-duplicate suppression — the streaming twin of the
   * batch SimHash dedup (`ops.Dedup.simhashPairs`/`simhashClusters`).
@@ -42,32 +43,11 @@ object DedupStream {
 
   private val BandBits = Consts.SimHashBits / Consts.SimhashBands
 
-  /** The batch simhash kernel, computed eagerly per document: per
-    * token, bit k votes +1 when hex nibble k of md5(token) has its
-    * high bit set, else -1; signature bit k is the vote sign. Token
-    * split and md5 match `Dedup.simhashFrame` exactly. */
-  def simhash16(text: String): Long = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-    val votes = new Array[Int](Consts.SimHashBits)
-    text.split("\\s+").foreach { tok =>
-      if (tok.nonEmpty) {
-        val d = md.digest(tok.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        var k = 0
-        while (k < Consts.SimHashBits) {
-          val nibble = if (k % 2 == 0) (d(k / 2) >> 4) & 0xf else d(k / 2) & 0xf
-          votes(k) += (if (nibble >= 8) 1 else -1)
-          k += 1
-        }
-      }
-    }
-    var sig = 0L
-    var k = 0
-    while (k < Consts.SimHashBits) {
-      if (votes(k) > 0) sig |= (1L << k)
-      k += 1
-    }
-    sig
-  }
+  /** The batch simhash kernel, computed eagerly per document: exactly
+    * `TextKernel.simhash16`, the vote loop behind `Dedup.simhash` and the
+    * `simhash16` SQL scalar, so it tokenizes with `TextKernel.words`. */
+  def simhash16(text: String): Long =
+    TextKernel.simhash16(text, java.security.MessageDigest.getInstance("MD5"))
 
   /** docs -> near-dup detections. Within a micro-batch, documents are
     * processed in doc_id order, so replaying a corpus in one batch

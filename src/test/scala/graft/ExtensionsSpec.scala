@@ -703,4 +703,25 @@ class ExtensionsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(viaSql.nonEmpty, "SQL q14 returned no pairs")
     assert(viaSql == viaOp)
   }
+
+  test("edge-text words, simhash16 and shingle_hashes agree with the Column tokenizer") {
+    import org.apache.spark.sql.functions._
+    val md = java.security.MessageDigest.getInstance("MD5")
+    // control chars at either end (String.trim would strip them, Spark's
+    // and DuckDB's trim do not), mixed whitespace, empty and blank text
+    Seq("\u0001a b\u0002 ", "\u0001 a b c d e", "  a\t\nb  ", "", "   ").foreach { s =>
+      val label = s.map(c => if (c < ' ') f"\\u${c.toInt}%04x" else c.toString).mkString
+      val r = spark.range(1).withColumn("t", lit(s)).select(
+        graft.ops.TextAnalytics.tokens(lit(s)), expr("simhash16(t)"),
+        expr("shingle_hashes(t, 32)")).head()
+      val toks = r.getSeq[String](0)
+      assert(graft.functions.TextKernel.words(s).toSeq == toks, s"words of '$label'")
+      assert(graft.streaming.DedupStream.simhash16(s) == r.getLong(1), s"simhash16 of '$label'")
+      val expect = toks.sliding(3).filter(_.length == 3).map { g =>
+        val d = md.digest(g.mkString(" ").getBytes(java.nio.charset.StandardCharsets.UTF_8))
+        ((d(0) & 0xffL) << 24) | ((d(1) & 0xffL) << 16) | ((d(2) & 0xffL) << 8) | (d(3) & 0xffL)
+      }.toSeq.distinct.sorted
+      assert(r.getSeq[Long](2) == expect, s"shingle_hashes of '$label'")
+    }
+  }
 }

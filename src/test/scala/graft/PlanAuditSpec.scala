@@ -448,6 +448,56 @@ class PlanAuditSpec extends SparkSpec {
       s"nested-loop candidate generation:\n$plan")
   }
 
+  test("q165/q166 append: pairs/ is repartitioned by bucket right above its partitioned write") {
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.CommandResultExec
+    import org.apache.spark.sql.execution.command.DataWritingCommandExec
+    import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+    def under(p: SparkPlan): Seq[SparkPlan] = p match {
+      case c: CommandResultExec => under(c.commandPhysicalPlan)
+      case other => flatten(other)
+    }
+    val pairsWrites = new java.util.concurrent.ConcurrentLinkedQueue[Seq[SparkPlan]]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(fn: String,
+                             qe: org.apache.spark.sql.execution.QueryExecution,
+                             ns: Long): Unit =
+        under(qe.executedPlan).foreach {
+          case w: DataWritingCommandExec => w.cmd match {
+            // the wave append, not the graph build's overwrite
+            case i: InsertIntoHadoopFsRelationCommand
+                if i.outputPath.toString.endsWith("/pairs") &&
+                  i.mode == org.apache.spark.sql.SaveMode.Append =>
+              pairsWrites.add(under(w.child))
+            case _ =>
+          }
+          case _ =>
+        }
+      override def onFailure(fn: String,
+                             qe: org.apache.spark.sql.execution.QueryExecution,
+                             e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      Dedup.graphAppendReport(spark, sf0001, Dedup.OracleHashBits)
+      // the execution-listener bus is async: poll briefly
+      val deadline = System.nanoTime() + 10000000000L
+      while (pairsWrites.isEmpty && System.nanoTime() < deadline) Thread.sleep(20)
+      assert(!pairsWrites.isEmpty, "no pairs/ write was observed")
+      val exchanges = pairsWrites.peek().collect { case e: ShuffleExchangeLike => e }
+      // one exchange under the write (the wave is checkpointed), and it
+      // is the bucket repartition: each task writes only its buckets
+      assert(exchanges.length == 1, s"pairs/ write is not one repartition:\n${pairsWrites.peek().mkString("\n")}")
+      exchanges.head.outputPartitioning match {
+        case h: HashPartitioning =>
+          assert(h.numPartitions == Dedup.GraphPairBuckets.toInt)
+          assert(h.expressions.flatMap(_.references.map(_.name)) == Seq("bucket"),
+            s"pairs/ repartition is not keyed on bucket: $h")
+        case other => fail(s"pairs/ write is not hash-repartitioned by bucket: $other")
+      }
+    } finally spark.listenerManager.unregister(listener)
+  }
+
   test("q168: queries broadcast into the candidate scan; pool top-C prunes before its shuffle") {
     val df = Similarity.mmrDiversify(spark, sf0001)
     val plan = executed(df)

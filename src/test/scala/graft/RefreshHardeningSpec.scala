@@ -302,6 +302,26 @@ class RefreshHardeningSpec extends SparkSpec {
     assert(!Files.exists(Paths.get(s"$idx/next_generation_tmp")))
   }
 
+  test("payload_buckets: a missing file is recorded as the legacy default; a malformed one throws") {
+    import java.nio.file.{Files, Paths}
+    val idx = scratch("rh-buckets").toString
+    val f = Paths.get(idx, "payload_buckets")
+    assert(AnnIndex.ensurePayloadBuckets(idx) == AnnIndex.PayloadBucketsLegacyDefault)
+    assert(Files.readString(f) == AnnIndex.PayloadBucketsLegacyDefault.toString,
+      "the legacy default must be recorded for later appenders")
+    // an empty or garbled file (torn write, hand edit) must fail the
+    // append loudly, never silently bucket with the legacy default
+    Seq("", "x").foreach { bad =>
+      Files.writeString(f, bad)
+      val e = intercept[IllegalStateException](AnnIndex.ensurePayloadBuckets(idx))
+      assert(e.getMessage.contains(f.toString) && e.getMessage.contains(s"'$bad'"), e.getMessage)
+    }
+    Files.writeString(f, "256\n")
+    assert(AnnIndex.ensurePayloadBuckets(idx) == 256)
+    val ls = Files.list(Paths.get(idx))
+    try assert(ls.count() == 1, "a temp file was left behind") finally ls.close()
+  }
+
   test("distributed refresh handles glob-metachar filenames and mid-refresh deletions") {
     val repo = scratch("rh-glob-repo")
     writeBaseRepo(repo)
